@@ -1,4 +1,4 @@
-"""Blocking: candidate-pair generation without the O(N²) cross join.
+"""Blocking: the key families, and DataFrame candidate generators.
 
 Two key families (BASELINE.json north_star stage 1):
 
@@ -8,17 +8,23 @@ Two key families (BASELINE.json north_star stage 1):
      keys (Arrow pandas_udf; ``explode`` of the band-key array), catching
      pairs whose *first* token was corrupted.
 
-Skew handling is explicit (north_rule): block sizes are measured, and
-blocks above ``max_block_size`` switch from all-pairs to a
-sorted-neighborhood window (sort members, pair each with its ``window``
-successors) — bounded O(size·window) instead of O(size²), deterministic,
-and pure DataFrame ops. This is the "salted repartitioning / split hot
-blocking keys" requirement: a hot key like 'global' (or 'smith') no longer
-produces a quadratic shuffle partition.
+``keyed_records`` computes them as Spark columns;
+``operators.localpairs.record_keys`` computes the same keys in Python.
 
-At 100 TB: the pair generator shuffles on block_key; AQE skew-join
-splitting handles residual imbalance, and the size cap bounds any single
-reducer's work regardless of key distribution.
+``link()``'s pair stage does not use this module's generators: it is one
+block kernel (``operators.localpairs``) in two placements — in-process
+over one group at dimension scale, or behind one keyed exchange (records
+exploded over these keys, one repartition by key, the kernel per
+partition, one reduce keyed by surface). ``candidate_pairs`` and
+``cross_family_pairs`` express the same per-key rules as joins and
+windows; the incremental cross-batch step (``streaming.incremental``)
+and the standalone benchmark layers still call them.
+
+Skew handling is explicit (north_rule) in both forms: blocks above
+``max_block_size`` switch from all-pairs to a sorted-neighborhood window
+(sort members, pair each with its ``window`` successors) — bounded
+O(size·window) instead of O(size²) and deterministic. A hot key like
+'global' (or 'smith') no longer produces a quadratic partition.
 """
 
 from __future__ import annotations
@@ -405,14 +411,17 @@ def cross_family_pairs(
     big_l = ranked.filter(F.col("side") == "L").select(
         "key", F.col("rid").alias("a"), F.col("norm").alias("norm_a"), "rpos"
     )
+    # the right side's key gets its own name: both sides derive from
+    # ``ranked``, so same-name references resolve to ONE attribute and the
+    # key equality would be trivially true
     big_r = ranked.filter(F.col("side") == "R").select(
-        "key", F.col("rid").alias("b"), F.col("norm").alias("norm_b"),
-        F.col("rpos").alias("rpos_r"),
+        F.col("key").alias("key_r"), F.col("rid").alias("b"),
+        F.col("norm").alias("norm_b"), F.col("rpos").alias("rpos_r"),
     )
     big_pairs = (
         big_l.join(
             big_r,
-            (big_l["key"] == big_r["key"])
+            (F.col("key") == F.col("key_r"))
             & (F.col("rpos_r") > F.col("rpos") - neighborhood)
             & (F.col("rpos_r") <= F.col("rpos") + neighborhood),
         )

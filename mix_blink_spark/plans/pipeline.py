@@ -1,8 +1,8 @@
 """The flagship end-to-end linkage pipeline (north_star stages 1-3).
 
-    pages ──extract_text──► mentions(spans) ──keys──►┐
-                                                     ├─ block join ─► pairs ─► score ─► edges ─► CC ─► clusters
-    entities ──NIL+surfaces──keys──► (broadcast) ────┘
+    pages ──extract_text──► mentions(spans) ──► distinct surfaces ──┐
+                                                                    ├─► pair stage ─► edges ─► CC ─► clusters
+    entities ──NIL + aliases ──► alias table (encoded once) ────────┘
 
 Graph construction (surface-form factored — the 100 TB-critical design):
   - every mention first collapses to its **normalized-surface node**
@@ -24,19 +24,27 @@ two mentions with lexically unrelated aliases of the same entity meet at
 the anchor. Pure-NIL duplicate mentions meet through mention↔mention
 edges instead.
 
+The pair stage (blocking → pair scoring → me top-1) is ONE block kernel
+(``operators.localpairs``) with two placements: in-process over one group
+up to ``LinkConfig.driver_pairs_limit`` records, else behind one keyed
+exchange — records explode over their blocking keys, one repartition by
+key, the kernel per partition, one reduce keyed by surface. Both give the
+same pairs bit for bit.
+
 Scale notes (100 TB):
   - the only wide rows (``html``) die immediately after text extraction
     (column pruning — verified in tests via the explained plan);
-  - entity surfaces are dimension-sized → broadcast join, no fact shuffle;
-  - mention↔mention pairs shuffle on block_key with the size cap /
-    sorted-neighborhood skew guard (operators/blocking.py);
+  - surfaces and aliases are dimension-sized: their embeddings ride one
+    broadcast matrix up to ``broadcast_dense_limit`` surfaces, and the
+    pair-stage records beyond it;
+  - the pair stage shuffles records once by blocking key, with the size
+    cap / sorted-neighbourhood skew guard applied per block;
   - CC runs on the (much smaller) above-threshold edge set with
     checkpointed iterations.
 """
 
 from __future__ import annotations
 
-import os as _os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,19 +52,16 @@ from pyspark.sql import functions as F
 
 from ..functions.embed import encode
 from ..functions.text import normalize_surface
-from ..operators.blocking import (
-    block_sizes_salted,
-    candidate_pairs,
-    cross_family_pairs,
-    keyed_records,
-)
 from ..operators.cc import connected_components
-from ..operators.scoring import (
-    check_measure,
-    fused_me_top1,
-    make_broadcast_dense_udf,
-    score_pairs,
+from ..operators.localpairs import (
+    ME,
+    MM,
+    PAIRS_SCHEMA,
+    distributed_pairs,
+    local_pairs,
+    stack_rows,
 )
+from ..operators.scoring import check_measure
 from ..sources.dictionary import explode_surfaces, with_nil
 from ..sources.pages import mentions_from_spans, with_extracted_text
 from .resume import StageStore
@@ -98,10 +103,11 @@ class LinkConfig:
     # whenever the span set fits a broadcast; the profiled 40%-sys
     # shuffle of round 3 was exactly this join's exchange
     broadcast_spans: bool = False
-    # high-vocabulary guard for the surface→entity candidate join: keys
-    # whose combined membership exceeds me_max_block_size switch to
-    # sorted-neighborhood pairing (operators/blocking.cross_family_pairs).
-    # None (default) = exact join on every key: every candidate a key can
+    # high-vocabulary guard for the surface→entity pairs of a block: keys
+    # whose combined membership (surfaces + aliases) exceeds
+    # me_max_block_size switch to an insertion window over the
+    # norm-interleaved order (operators.localpairs.block_kernel).
+    # None (default) = exact product on every key: every candidate a key can
     # produce is scored, so default recall never depends on sort
     # adjacency. The guard is OPT-IN because it is recall-affecting: a
     # true match inside a hot key that is not within ``neighborhood`` of
@@ -109,11 +115,12 @@ class LinkConfig:
     # value) at Common-Crawl vocabulary scale, where one hot key carried
     # 2.6k surfaces x 2k aliases = 5M scored pairs (round-3 finding).
     me_max_block_size: int | None = None
-    # up to this many distinct surfaces, pair scoring reads embeddings
-    # from BROADCAST matrices (north_star: the embedding index as a
-    # broadcast variable) and pair rows carry only ids — ~0.5 KB/row less
-    # shuffle+Arrow traffic. Above it, the join-the-vectors plan (scales
-    # to any vocabulary) takes over. 500k rows x 64 float32 = 128 MB.
+    # up to this many distinct surfaces, the pair stage reads embeddings
+    # from ONE broadcast matrix (north_star: the embedding index as a
+    # broadcast variable) and its records carry only a row index — ~0.25
+    # KB/row less shuffle + Arrow traffic. Above it the records carry
+    # their vectors through the exchange (scales to any vocabulary).
+    # 500k rows x 64 float32 = 128 MB.
     broadcast_dense_limit: int = 500_000
     # S8 integration: directory of an EntityIndexStore holding the
     # pre-encoded alias index (ord, id, norm, emb). When set, link() LOADS
@@ -125,14 +132,16 @@ class LinkConfig:
     # first run (dimension-scale path). Like StageStore, one store dir
     # binds to one (dictionary, encoder) configuration.
     alias_store: str | None = None
-    # up to this many (surfaces + aliases), blocking + pair scoring run
-    # DRIVER-LOCAL (operators.localpairs — same semantics, parity-gated):
-    # the distributed pairs DAG is ~20 Spark stages of pure scheduling
-    # overhead at dimension scale (~13 s of a 62 s bench leg at 625
-    # surfaces — the fixed cost that capped N->4N efficiency). The local
-    # path is SINGLE-threaded, so the crossover is low: measured ~0.3 s
-    # at 1.6k rows (bench dictionary) but 133 s at 42k rows, where the
-    # 8-core distributed path needs ~22 s. 0 disables.
+    # placement of the pair stage's block kernel: up to this many
+    # (surfaces + aliases) it runs in-process on the driver over ONE group
+    # — no Spark job, and the edges + union-find stay on the driver too.
+    # Above it, the same kernel runs behind one keyed exchange (records
+    # exploded over blocking keys, repartitioned by key, one kernel call
+    # per partition, one reduce keyed by surface) — a handful of jobs
+    # whose fixed cost the in-process placement saves at dimension scale,
+    # and which spreads the work over every core at vocabulary scale (the
+    # in-process placement is single-threaded). Both placements give the
+    # same pairs bit for bit. 0 always uses the exchange.
     driver_pairs_limit: int = 4_000
 
     def __post_init__(self) -> None:
@@ -143,10 +152,13 @@ def _with_emb(df: DataFrame, text_col: str = "norm", enc=None) -> DataFrame:
     return df.withColumn("emb", (enc or encode)(F.col(text_col)))
 
 
-def _attach_embs(pairs: DataFrame, embs_a: DataFrame, embs_b: DataFrame) -> DataFrame:
-    ea = embs_a.select(F.col("rid").alias("a"), F.col("emb").alias("emb_a"))
-    eb = embs_b.select(F.col("rid").alias("b"), F.col("emb").alias("emb_b"))
-    return pairs.join(ea, "a").join(eb, "b")
+def _matrix(embs):
+    """float32 row matrix of a collected ``emb`` column."""
+    import numpy as np
+
+    if not len(embs):
+        return np.zeros((0, 1), np.float32)
+    return np.stack(embs.to_numpy()).astype(np.float32)
 
 
 def build_mentions(
@@ -305,8 +317,10 @@ def link(
     # dimension-scale data runs on few partitions: each Python-UDF task has
     # a fixed Arrow/worker cost, so 625 surfaces across 32 partitions is
     # ~10x slower than across 1 (measured); fact-scale stages keep full
-    # parallelism. No second persist/count: re-reading the surfaces0 cache
-    # through a coalesce is cheaper than another action per run.
+    # parallelism. The alias table is partitioned the same way (n_surf is
+    # its size proxy — no dedicated count job). No second persist/count:
+    # re-reading the surfaces0 cache through a coalesce is cheaper than
+    # another action per run.
     p_surf = max(1, min(spark.sparkContext.defaultParallelism, n_surf // 2000 + 1))
     surfaces = surfaces0.coalesce(p_surf)
     mark(f"surfaces materialize (n={n_surf}, p={p_surf})", _t0)
@@ -336,49 +350,33 @@ def link(
     )
 
     _t0 = _time.monotonic()
-    s_keyed = keyed_records(surfaces, "rid").persist()
-    e_keyed = keyed_records(alias_records, "rid")
-    # surface-side block-size histogram, computed ONCE and shared by both
-    # pair generators (candidate_pairs sizes its own blocks with it;
-    # cross_family_pairs adds the dimension side's tiny per-key counts) —
-    # one salted aggregation pass over s_keyed instead of two
-    s_sizes = block_sizes_salted(s_keyed).persist()
-
-    # s_keyed fills its cache lazily inside the first pairs job — cheap
-    # column exprs + one tiny minhash UDF task, not worth a dedicated
-    # action per run. The encoder kernel (one eager action) runs as a
-    # Spark job either way; at dimension scale its RESULT is collected
-    # into broadcast matrices so candidate pairs carry only ids — the
-    # north_star's "embedding index as a broadcast variable". Above the
-    # limit (vocabularies past driver memory) the vectors stay distributed
-    # and join onto pairs instead.
-    s_embs = _with_emb(surfaces.select("rid", "norm"), enc=cfg.encoder).persist()
+    s_embs = _with_emb(surfaces.select("rid", "norm"), enc=cfg.encoder)
     # resumable runs with BOTH pair stages already committed skip every
     # eager scoring prerequisite below (surface toPandas, alias encode or
-    # store load, broadcasts, store commit): the mm_pairs/me_pairs
-    # closures are never invoked, so building their inputs at plan-build
-    # time was pure waste on resume (round-4 ADVICE).
+    # store load, broadcasts, store commit): the pair stage is never
+    # invoked, so building its inputs at plan-build time was pure waste on
+    # resume (round-4 ADVICE).
     pairs_cached = (
         store is not None and store.is_done("pairs_mm") and store.is_done("pairs_me")
     )
     use_bc = not pairs_cached and n_surf <= cfg.broadcast_dense_limit
-    bc_s = None
+    spdf = apdf = None
     s_rows: list | None = None
-    s_mat = None
-    apdf = None
     if use_bc:
-        import numpy as np
-
+        # The encoder kernel (one eager action) runs as a Spark job either
+        # way; at dimension scale its RESULT is collected into one
+        # broadcast matrix so pair-stage records carry only a row index —
+        # the north_star's "embedding index as a broadcast variable".
+        # Above the limit (vocabularies past driver memory) the vectors
+        # stay distributed and ride the records instead.
+        #
         # alias dimension table: the committed store's rows when loaded
-        # (S8 reuse — no re-encode; the SAME rows e_keyed blocks on), else
-        # alias_records encoded as a Spark job (partitioned by the n_surf
-        # proxy — avoids a dedicated count job) and committed to the store
-        # if one was given. Collected once for both the broadcast-dense
-        # and local paths. Without a store, surfaces and aliases encode +
-        # collect in ONE side-tagged Spark job instead of two: at
-        # dimension scale each toPandas round trip is mostly fixed job
-        # overhead, and that fixed cost is what caps the N→4N ratio
-        # (round 5 — both legs pay it equally).
+        # (S8 reuse — no re-encode; the SAME rows the pair stage blocks
+        # on), else alias_records encoded as a Spark job and committed to
+        # the store if one was given. Without a store, surfaces and
+        # aliases encode + collect in ONE side-tagged Spark job instead of
+        # two: at dimension scale each toPandas round trip is mostly fixed
+        # job overhead (round 5).
         if store_idx is not None:
             spdf = s_embs.select("rid", "norm", "emb").toPandas()
             apdf = (
@@ -387,17 +385,16 @@ def link(
                 .toPandas()
             )
         else:
-            p_ent = max(1, min(spark.sparkContext.defaultParallelism, n_surf // 2000 + 1))
             both = (
                 surfaces.select("rid", "norm")
                 .withColumn("side", F.lit(0))
                 .unionByName(
-                    alias_records.coalesce(p_ent).withColumn("side", F.lit(1))
+                    alias_records.coalesce(p_surf).withColumn("side", F.lit(1))
                 )
-                # the union carries p_surf + p_ent partitions; at dimension
+                # the union carries 2 x p_surf partitions; at dimension
                 # scale that's 2 sequential ~0.5s-fixed-cost UDF tasks for
                 # ~1k tiny rows — collapse to the intended parallelism
-                .coalesce(p_ent)
+                .coalesce(p_surf)
             )
             if cfg.encoder is None:
                 # default trigram encoder: its batch kernel
@@ -405,11 +402,9 @@ def link(
                 # so at dimension scale the rows come back in ONE collect
                 # job with NO Arrow-UDF stage and the encode runs here —
                 # bit-identical float32 rows (same kernel, same None→""
-                # fold as the pandas_udf wrapper), one fewer Python-worker
-                # round trip in the fixed tail every leg pays (round 8;
-                # the N→4N gate is capped by exactly this fixed cost). A
-                # custom cfg.encoder keeps the UDF job: its batch_fn may
-                # need worker-side state (HF weights) by design.
+                # fold as the pandas_udf wrapper). A custom cfg.encoder
+                # keeps the UDF job: its batch_fn may need worker-side
+                # state (HF weights) by design.
                 from ..functions.embed import encode_matrix
 
                 bpdf = both.select("side", "rid", "norm").toPandas()
@@ -425,20 +420,10 @@ def link(
                 )
             spdf = bpdf[bpdf["side"] == 0].reset_index(drop=True)
             apdf = bpdf[bpdf["side"] == 1].reset_index(drop=True)
-        s_ids = {r: i for i, r in enumerate(spdf["rid"])}
         s_rows = list(zip(spdf["rid"], spdf["norm"]))
-        s_mat = (
-            np.stack(spdf["emb"].to_numpy()).astype(np.float32)
-            if len(spdf)
-            else np.zeros((0, 1), np.float32)
-        )
-        bc_s = spark.sparkContext.broadcast((s_ids, s_mat))
+        s_mat = _matrix(spdf["emb"])
         a_rows = list(zip(apdf["rid"], apdf["norm"]))
-        a_mat = (
-            np.stack(apdf["emb"].to_numpy()).astype(np.float32)
-            if len(apdf)
-            else np.zeros((0, 1), np.float32)
-        )
+        a_mat = _matrix(apdf["emb"])
         if ai_store is not None and ai_store.version() is None:
             index_df = spark.createDataFrame(
                 [
@@ -456,176 +441,84 @@ def link(
                     "measure": cfg.measure,
                 },
             )
-    elif not pairs_cached:
-        s_embs.count()
     use_local = (
         cfg.driver_pairs_limit > 0
         and use_bc
-        and apdf is not None
         and n_surf + len(apdf) <= cfg.driver_pairs_limit
     )
     mark(f"keys+embs materialize (local_pairs={use_local})", _t0)
-    _PAIRS_SCHEMA = "a string, b string, dense double, jw double, lev double, score double"
-    # pair rows computed driver-side (use_local regime) are stashed here so
-    # the edges/CC steps below can reuse them without a Spark round trip
-    _local: dict[str, list] = {}
-    # intermediate caches opened by blocking operators (diamond-plan
-    # persists); unpersisted with the pipeline's own caches below
-    _op_caches: list = []
 
-    def mm_pairs():
+    kernel_args = dict(
+        measure=cfg.measure,
+        dense_weight=cfg.dense_weight,
+        tau_ent=cfg.tau_ent,
+        max_block_size=cfg.max_block_size,
+        me_max_block_size=cfg.me_max_block_size,
+        neighborhood=cfg.neighborhood,
+    )
+    # The pair stage (operators.localpairs): ONE block kernel, placed
+    # in-process below driver_pairs_limit ("local": reduced (mm, me) rows
+    # that never leave the driver) or behind one keyed exchange ("df": a
+    # frame of kind-tagged rows). Built once, on first use by either pairs
+    # frame; aliases are scored per (id, norm) — one entity may carry
+    # several alias norms.
+    _pairs: dict = {}
+
+    def pair_stage() -> dict:
+        if _pairs:
+            return _pairs
         if use_local:
-            from ..operators.localpairs import local_mm_pairs
-
-            rows = local_mm_pairs(
-                s_rows, s_mat, cfg.measure, cfg.dense_weight,
-                cfg.max_block_size, cfg.neighborhood,
-            )
-            _local["mm"] = rows
-            return spark.createDataFrame(rows, _PAIRS_SCHEMA)
-        # SPARK_GRAFT_MM_DEDUP=0 (A/B knob, round-7 TODO): skip the global
-        # per-(a, b) dropDuplicates — the mm side's one remaining full
-        # shuffle of the whole pair set. Duplicate pairs score identically
-        # and the edge set is distinct()ed inside connected_components, so
-        # clusters are invariant; pairs_mm rows/histograms then count a
-        # pair once per shared blocking key, which is why the deduped
-        # contract stays the default until the A/B shows a win worth that
-        # caveat (see bench_artifacts/highvocab_r7*.json).
-        p = candidate_pairs(
-            s_keyed, cfg.max_block_size, cfg.neighborhood, sizes=s_sizes,
-            caches=_op_caches,
-            dedup=_os.environ.get("SPARK_GRAFT_MM_DEDUP", "1") != "0",
-        )
-        if _os.environ.get("SPARK_GRAFT_PROFILE_PAIRGEN") == "1":
-            # profiling only (off by default): materialize the candidate
-            # rows BEFORE scoring so the stage log splits generation from
-            # scoring — the count re-executes the (diamond-cached)
-            # generation subtree, so never enable outside a profile run
-            _tg = _time.monotonic()
-            mark(f"pairs_mm generation only (n={p.count()})", _tg)
+            _pairs["local"] = local_pairs(s_rows, s_mat, a_rows, a_mat, **kernel_args)
+            return _pairs
+        mat_bc = None
         if use_bc:
-            dense_udf = make_broadcast_dense_udf(cfg.measure, bc_s, bc_s)
-            p = p.withColumn("dense", dense_udf(F.col("a"), F.col("b")))
-            scored = score_pairs(p, cfg.measure, cfg.dense_weight, dense_col="dense")
+            # records carry a row index into one broadcast matrix
+            import numpy as np
+            import pandas as pd
+
+            recs = pd.concat(
+                [spdf[["rid", "norm"]].assign(side=0), apdf[["rid", "norm"]].assign(side=1)],
+                ignore_index=True,
+            )
+            recs["idx"] = np.arange(len(recs), dtype=np.int32)
+            records = spark.createDataFrame(
+                recs[["side", "rid", "norm", "idx"]],
+                "side tinyint, rid string, norm string, idx int",
+            )
+            mat_bc = spark.sparkContext.broadcast(stack_rows(s_mat, a_mat))
         else:
-            p = _attach_embs(p, s_embs, s_embs)
-            scored = score_pairs(p, cfg.measure, cfg.dense_weight)
-        return scored.select("a", "b", "dense", "jw", "lev", "score")
-
-    def me_pairs():
-        # entity aliases scored independently (entity rid alone is not
-        # unique — one entity can carry several alias norms). Aliases are
-        # pre-encoded ONCE as a dimension table (encoding on the pair rows
-        # would run the encoder UDF once per (surface, alias) pair — a
-        # fan-out multiplier that melts with a real transformer behind the
-        # seam), then either collected into a broadcast matrix keyed by
-        # (rid, norm) or broadcast-joined onto the pairs.
-        if use_local:
-            from ..operators.localpairs import local_me_pairs
-
-            rows = local_me_pairs(
-                s_rows, s_mat, a_rows, a_mat, cfg.measure, cfg.dense_weight,
-                cfg.tau_ent, cfg.me_max_block_size, cfg.neighborhood,
+            # beyond-broadcast vocabulary: records carry their vectors;
+            # the alias side is the committed store's rows when loaded
+            alias_embs = (
+                store_idx.select(F.col("id").alias("rid"), "norm", "emb")
+                if store_idx is not None
+                else _with_emb(alias_records.coalesce(p_surf), enc=cfg.encoder)
             )
-            _local["me"] = rows
-            return spark.createDataFrame(rows, _PAIRS_SCHEMA)
-        # dedup=False: the top-1 window below already collapses duplicate
-        # (a, b, norm_b) candidates (identical rows score identically, so
-        # rank-1 output is invariant) — skipping the dropDuplicates saves
-        # a full shuffle of the largest intermediate in the pipeline
-        # (0.6-4M rows at 8k entities, round-4 profile)
-        p = cross_family_pairs(
-            s_keyed,
-            e_keyed,
-            max_block_size=cfg.me_max_block_size,
-            neighborhood=cfg.neighborhood,
-            dedup=False,
-            left_sizes=s_sizes,
-            caches=_op_caches,
+            records = s_embs.select(
+                F.lit(0).cast("tinyint").alias("side"), "rid", "norm", "emb"
+            ).unionByName(
+                alias_embs.select(F.lit(1).cast("tinyint").alias("side"), "rid", "norm", "emb")
+            )
+        tagged = distributed_pairs(
+            records,
+            partitions=spark.sparkContext.defaultParallelism,
+            mat_bc=mat_bc,
+            **kernel_args,
         )
-        if _os.environ.get("SPARK_GRAFT_PROFILE_PAIRGEN") == "1":
-            # same generation/scoring split for the me leg (see pairs_mm)
-            _tg = _time.monotonic()
-            mark(f"pairs_me generation only (n={p.count()})", _tg)
-        if use_bc:
-            a_ids = {f"{r}\x00{nm}": i for i, (r, nm) in enumerate(a_rows)}
-            bc_e = spark.sparkContext.broadcast((a_ids, a_mat))
-            if _os.environ.get("SPARK_GRAFT_ME_PLAN", "fused") != "window":
-                # fused score + top-1-per-surface (round-5 verdict item
-                # 3): Levenshtein stays a JVM codegen column; dense + JW
-                # + the per-partition argmax run in ONE Arrow stage, so
-                # only each partition's per-surface winners — not every
-                # scored candidate — reach the final ranking exchange.
-                # SPARK_GRAFT_ME_PLAN=window keeps the pre-fusion plan for A/B
-                # attribution only (bit-identical output, parity-gated).
-                from ..functions.strsim import levenshtein_sim
+        # a store (or verbose mode) materializes pairs_mm and pairs_me one
+        # at a time: cache the tagged rows so the stage runs once. Otherwise
+        # the edges below are the stage's only consumer in one pass.
+        _pairs["df"] = tagged.persist() if store is not None or verbose else tagged
+        return _pairs
 
-                p = p.withColumn(
-                    "lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b"))
-                )
-                return fused_me_top1(
-                    p, cfg.measure, cfg.dense_weight, cfg.tau_ent, bc_s, bc_e
-                )
-            dense_udf = make_broadcast_dense_udf(cfg.measure, bc_s, bc_e)
-            p = p.withColumn(
-                "dense",
-                dense_udf(F.col("a"), F.concat_ws("\x00", F.col("b"), F.col("norm_b"))),
-            )
-            scored = score_pairs(p, cfg.measure, cfg.dense_weight, dense_col="dense")
-        else:
-            if store_idx is not None:
-                # vocabulary-scale reuse: the stored index stays a
-                # distributed frame (load-only here; committing an
-                # ordinal at this scale is the store builder's job) —
-                # the SAME rows e_keyed blocks on, so the join is inner
-                # over a consistent dictionary in every regime
-                alias_embs = store_idx.select(F.col("id").alias("rid"), "norm", "emb")
-            else:
-                # dimension-scale partitioning heuristic: each Arrow UDF
-                # task has a ~0.25 s fixed cost, so tiny alias tables
-                # encode on one partition; large dictionaries keep
-                # parallelism
-                p_ent = max(
-                    1,
-                    min(spark.sparkContext.defaultParallelism, alias_records.count() // 2000 + 1),
-                )
-                alias_embs = _with_emb(alias_records.coalesce(p_ent), enc=cfg.encoder)
-            ea = s_embs.select(F.col("rid").alias("a"), F.col("emb").alias("emb_a"))
-            eb = F.broadcast(
-                alias_embs.select(
-                    F.col("rid").alias("b"), F.col("norm").alias("norm_b"), F.col("emb").alias("emb_b")
-                )
-            )
-            p = p.join(ea, "a").join(eb, ["b", "norm_b"])
-            if _os.environ.get("SPARK_GRAFT_ME_PLAN", "fused") != "window":
-                # row-embedding fused reduction: at beyond-broadcast
-                # vocabulary the scored-candidate exchange the window
-                # would shuffle is the pipeline's largest intermediate —
-                # reduce to per-partition winners inside the scoring
-                # stage here too (same kernels; bit-identical output,
-                # covered by the regime-parity test at forced
-                # broadcast_dense_limit=0)
-                from ..functions.strsim import levenshtein_sim
+    def pair_frame(kind: int) -> DataFrame:
+        st = pair_stage()
+        if "local" in st:
+            return spark.createDataFrame(st["local"][kind], PAIRS_SCHEMA)
+        return st["df"].filter(F.col("kind") == kind).drop("kind")
 
-                p = p.withColumn(
-                    "lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b"))
-                )
-                return fused_me_top1(
-                    p, cfg.measure, cfg.dense_weight, cfg.tau_ent
-                )
-            scored = score_pairs(p, cfg.measure, cfg.dense_weight)
-        # top-1 entity per surface, deterministic tie-break on entity id
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("a").orderBy(F.col("score").desc(), F.col("b"), F.col("norm_b"))
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter((F.col("rk") == 1) & (F.col("score") >= cfg.tau_ent))
-            .select("a", "b", "dense", "jw", "lev", "score")
-        )
-
-    pairs_mm = stage("pairs_mm", mm_pairs)
-    pairs_me = stage("pairs_me", me_pairs)
+    pairs_mm = stage("pairs_mm", lambda: pair_frame(MM))
+    pairs_me = stage("pairs_me", lambda: pair_frame(ME))
     if verbose and store is None:
         # eager-pairs attribution (round-3 verdict item 7): the pairs
         # frames are lazy, so without this the first action under a LATER
@@ -651,6 +544,12 @@ def link(
         # surface/entity graph only — mentions are projected back after CC
         # via their surface node, so the iterative stage runs on a graph
         # ~|distinct surfaces|, independent of corpus size
+        if store is None and "df" in _pairs:
+            # one filter over the tagged rows: a union of the two pairs
+            # views would run the pair stage once per view
+            return _pairs["df"].filter(
+                (F.col("kind") == ME) | (F.col("score") >= cfg.tau_mm)
+            ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
         mm = pairs_mm.filter(F.col("score") >= cfg.tau_mm).select(
             F.col("a").alias("src"), F.col("b").alias("dst")
         )
@@ -661,19 +560,20 @@ def link(
     n_edges: int | None = None
     local_assign: list[tuple[str, str]] | None = None
     edges_persisted = False
-    if store is None and use_local and "mm" in _local and "me" in _local:
+    if store is None and "local" in _pairs:
         # the pair rows never left the driver in this regime, so edges and
         # the union-find run here directly — skipping the edges count job,
         # CC's collect job, and the pair-cache re-read. Same contract as
         # connected_components' driver path (self-loops dropped, min-id
         # cluster ids); the returned `edges` DataFrame is definitionally
-        # the same rows (make_edges over createDataFrame'd _local rows).
+        # the same rows (make_edges over the createDataFrame'd local rows).
         from ..operators.cc import _unionfind_local
 
         _t0 = _time.monotonic()
+        mm_rows, me_rows = _pairs["local"]
         edge_rows = [
-            (r[0], r[1]) for r in _local["mm"] if r[5] >= cfg.tau_mm and r[0] != r[1]
-        ] + [(r[0], r[1]) for r in _local["me"] if r[0] != r[1]]
+            (r[0], r[1]) for r in mm_rows if r[5] >= cfg.tau_mm and r[0] != r[1]
+        ] + [(r[0], r[1]) for r in me_rows if r[0] != r[1]]
         n_edges = len(edge_rows)
         local_assign = _unionfind_local(edge_rows)
         mark(f"edges local (n={n_edges})", _t0)
@@ -744,7 +644,9 @@ def link(
         _t0 = _time.monotonic()
         clusters.count()
         mark("clusters materialize", _t0)
-    unpersist = [surfaces0, s_keyed, s_sizes, s_embs, *_op_caches]
+    unpersist = [surfaces0]
+    if "df" in _pairs and _pairs["df"].is_cached:
+        unpersist.append(_pairs["df"])
     if store is None:
         unpersist.append(m_narrow)
     if edges_persisted:

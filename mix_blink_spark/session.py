@@ -12,6 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory() -> str:
+    """A quarter of the host's physical memory, at most 48 GiB.
+
+    In ``local`` mode the driver JVM is also the executor, so its heap
+    must fit the host with room for the Python workers and the page
+    cache: a fixed 48g heap on a 15 GiB host grows past physical memory
+    before a full GC runs, and the kernel kills the JVM."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (OSError, ValueError):
+        return "4g"
+    return f"{min(total // 4 // 2**20, 48 * 1024)}m"
+
+
 # At 100 TB / 1000 executors these become cluster-level spark-defaults;
 # values here are the local[N] analogues of the same knobs.
 _BASE_CONF = {
@@ -59,8 +74,10 @@ _BASE_CONF = {
     "spark.sql.warehouse.dir": os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mbs-warehouse"),
     # local mode: the driver IS the executor — 32 concurrent tasks with
     # Arrow batches + shuffle buffers thrash GC under small heaps (measured
-    # 66s -> 41s on the bench pipeline going 8g -> 24g)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # 66s -> 41s on the bench pipeline going 8g -> 24g), but the heap must
+    # also fit the host: sized from physical memory, SPARK_GRAFT_DRIVER_MEM
+    # overrides
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
 }
 
 

@@ -139,3 +139,39 @@ def test_cross_family_dedup_false_and_shared_sizes_match(spark):
     assert {(p["a"], p["b"], p["norm_b"]) for p in shared.collect()} == {
         (p["a"], p["b"], p["norm_b"]) for p in plain.collect()
     }
+
+
+def test_cross_family_big_blocks_pair_within_their_key(spark):
+    """Two hot keys whose rank windows overlap: the guarded big-block
+    join must pair each surface only with aliases of its OWN key (the
+    join's key equality compares two distinct columns), and exactly the
+    aliases whose rank among that key's aliases lies in (rpos - w,
+    rpos + w], rpos = aliases sorting at or before the surface."""
+    n, w = 12, 2
+    names = [f"{tok} n{i:02d}" for tok in ("alpha", "beta") for i in range(n)]
+
+    def tk_keyed(prefix, rows):
+        keyed = keyed_records(_recs(spark, [(f"{prefix}{nm}", nm) for nm in rows]), "rid")
+        return keyed.filter(F.col("key").startswith("tk:"))
+
+    mentions = tk_keyed("m:", names[::2])
+    ents = tk_keyed("E:", names[1::2])
+    got = {
+        (p["a"], p["b"])
+        for p in cross_family_pairs(mentions, ents, max_block_size=5, neighborhood=w).collect()
+    }
+
+    want = set()
+    for tok in ("alpha", "beta"):
+        combo = sorted(
+            [(nm, 1, f"m:{nm}") for nm in names[::2] if nm.startswith(tok)]
+            + [(nm, 0, f"E:{nm}") for nm in names[1::2] if nm.startswith(tok)]
+        )
+        aliases = [rid for _nm, side, rid in combo if side == 0]
+        rpos = 0
+        for _nm, side, rid in combo:
+            if side == 0:
+                rpos += 1
+            else:
+                want |= {(rid, b) for b in aliases[max(rpos - w, 0) : rpos + w]}
+    assert got == want and len(want) > 0

@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mix_blink_spark.fixtures import corpus_dfs
@@ -109,11 +111,12 @@ def test_resume_skips_completed_stages(spark, e2e, tmp_path):
 
 
 def test_local_pairs_parity_with_distributed(spark, e2e):
-    """The driver-local pairs fast path (operators.localpairs, engaged at
-    dimension scale) must produce EXACTLY the distributed plan's pairs —
-    same (a, b) sets, bit-identical scores — and the same final clusters.
-    max_block_size/me cap are forced low so BOTH the all-pairs and the
-    sorted-neighborhood/insertion-window branches execute in each engine."""
+    """The pair stage's two placements (operators.localpairs: the block
+    kernel in-process at dimension scale, or behind the keyed exchange)
+    must produce EXACTLY the same pairs — same (a, b) sets, bit-identical
+    scores — and the same final clusters. max_block_size/me cap are
+    forced low so BOTH the all-pairs and the sorted-neighborhood/
+    insertion-window branches execute in each placement."""
     pages, ents, golds, labeled = e2e
     spans = golds.select("url", "mention_id", "start", "end")
 
@@ -128,8 +131,8 @@ def test_local_pairs_parity_with_distributed(spark, e2e):
         cl = {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
         return mm, me, cl
 
-    mm_l, me_l, cl_l = run(50_000)   # local path (dimension-scale corpus)
-    mm_d, me_d, cl_d = run(0)        # distributed path forced
+    mm_l, me_l, cl_l = run(50_000)   # in-process (dimension-scale corpus)
+    mm_d, me_d, cl_d = run(0)        # keyed exchange forced
 
     assert set(mm_l) == set(mm_d)
     assert set(me_l) == set(me_d)
@@ -201,61 +204,85 @@ def test_link_parquet_path_parity(spark, tmp_path):
         link(spark, pq_dir, spans, ents, LinkConfig(jvm_extract=True))
 
 
-def test_rowemb_fused_parity_beyond_broadcast(spark, monkeypatch):
-    """broadcast_dense_limit=0 forces the join-the-vectors (row-embedding)
-    scoring plan — the beyond-broadcast vocabulary regime. Its fused
-    reduction must produce exactly the window plan's me pairs, which must
-    also equal the broadcast-matrix branch's."""
+def test_rowemb_parity_beyond_broadcast(spark):
+    """broadcast_dense_limit=0 forces the row-embedding input of the pair
+    stage — the beyond-broadcast vocabulary regime, where records carry
+    their vectors through the keyed exchange. Its me pairs must equal the
+    broadcast-matrix regime's, bit for bit."""
     from mix_blink_spark.fixtures import corpus_dfs
 
     pages, ents, golds, _ = corpus_dfs(spark, seed=23, n_pages=250, n_entities=20)
     spans = golds.select("url", "mention_id", "start", "end")
 
-    def run(limit, plan):
-        monkeypatch.setenv("SPARK_GRAFT_ME_PLAN", plan)
+    def run(limit):
         cfg = LinkConfig(driver_pairs_limit=0, broadcast_dense_limit=limit)
         out = link(spark, pages, spans, ents, cfg)
         return {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
                 for r in out["pairs_me"].collect()}
 
-    rowemb_fused = run(0, "fused")
-    rowemb_window = run(0, "window")
-    bc_fused = run(500_000, "fused")
-    assert rowemb_fused == rowemb_window
-    assert rowemb_fused == bc_fused
-    assert len(rowemb_fused) > 0
+    rowemb = run(0)
+    assert rowemb == run(500_000)
+    assert len(rowemb) > 0
 
 
-def test_mm_dedup_knob_cluster_parity(spark, monkeypatch):
-    """SPARK_GRAFT_MM_DEDUP=0 skips the mm side's global per-(a, b)
-    dropDuplicates (a full shuffle of the pair set). Duplicate pairs score
-    identically and the edge set is distinct()ed inside
-    connected_components, so clusters must be invariant; the undeduped
-    pair set must equal the deduped one AS A SET (a pair sharing k
-    blocking keys appears k times), with bit-identical scores per key.
-    Measured 1.36x duplicates / net-slower at local[8] in round 7
-    (bench_artifacts/highvocab_r7.json) — the knob stays for cluster-scale
-    re-evaluation, and this test pins its correctness contract."""
+# jobs one keyed-exchange link() submits on the corpus below: 22 with the
+# block kernel (local[4]); the DataFrame blocking + scoring DAG it
+# replaced ran 38
+LINK_JOB_CEILING = 25
+
+
+def test_distributed_link_job_count(spark):
+    """A ceiling on the Spark jobs one link() runs with the pair stage on
+    the keyed exchange (driver_pairs_limit=0), counted by job group — so a
+    change cannot quietly bring back a many-job pair DAG."""
     from mix_blink_spark.fixtures import corpus_dfs
 
-    pages, ents, golds, _ = corpus_dfs(spark, seed=17, n_pages=250, n_entities=20)
+    pages, ents, golds, _ = corpus_dfs(spark, seed=29, n_pages=300, n_entities=30)
+    for df in (pages, ents, golds):
+        df.cache().count()
     spans = golds.select("url", "mention_id", "start", "end")
+    sc = spark.sparkContext
+    sc.setJobGroup("link-job-count", "distributed-placement link()")
+    try:
+        out = link(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=0))
+        jobs = sc.statusTracker().getJobIdsForGroup("link-job-count")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out["clusters"].count() > 0
+    assert 0 < len(jobs) <= LINK_JOB_CEILING, len(jobs)
 
-    def run(dedup_env):
-        monkeypatch.setenv("SPARK_GRAFT_MM_DEDUP", dedup_env)
-        # driver_pairs_limit=0 forces the distributed generators (the
-        # knob only exists on the distributed mm path)
-        cfg = LinkConfig(driver_pairs_limit=0, max_block_size=12, neighborhood=4)
-        out = link(spark, pages, spans, ents, cfg)
-        mm_rows = out["pairs_mm"].collect()
-        mm = {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
-              for r in mm_rows}
-        cl = {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
-        return mm, len(mm_rows), cl
 
-    mm_d, n_d, cl_d = run("1")
-    mm_r, n_r, cl_r = run("0")
-    assert mm_d == mm_r            # same pair set, bit-identical scores
-    assert n_r >= n_d              # raw rows may carry duplicates
-    assert cl_d == cl_r            # clusters invariant
-    assert len(cl_d) > 0
+@pytest.fixture(scope="module")
+def unshuffled(spark):
+    """A corpus and its clusters in each pair-stage placement, at the
+    session's own page order and shuffle partitions."""
+    pages, ents, golds, _ = corpus_dfs(spark, seed=37, n_pages=200, n_entities=20)
+    spans = golds.select("url", "mention_id", "start", "end")
+    want = {limit: _clusters(spark, pages, spans, ents, limit) for limit in (0, 50_000)}
+    assert want[0] == want[50_000]
+    return pages, spans, ents, want
+
+
+def _clusters(spark, pages, spans, ents, driver_pairs_limit):
+    out = link(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=driver_pairs_limit))
+    return {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
+
+
+@settings(max_examples=3, deadline=None)
+@given(order_seed=st.integers(0, 2**16), partitions=st.sampled_from([1, 3, 7]))
+def test_clusters_invariant_to_page_order_and_partitions(
+    spark, unshuffled, order_seed, partitions
+):
+    """Metamorphic: shuffling the page order and changing
+    spark.sql.shuffle.partitions leaves link()'s clusters unchanged, in
+    both pair-stage placements."""
+    pages, spans, ents, want = unshuffled
+    shuffled = pages.orderBy(F.rand(order_seed)).repartition(partitions)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        for limit in (0, 50_000):
+            assert _clusters(spark, shuffled, spans, ents, limit) == want[limit], limit
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

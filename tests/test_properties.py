@@ -154,3 +154,66 @@ def test_extract_total_on_huge_attribute_values(prefix, n):
     out = extract_text_str(page)
     assert "link" in out and "tail" in out
     assert big_attr not in out
+
+
+# --- the pair-stage block kernel (operators.localpairs) ---------------------
+
+_TOKENS = ["acme", "acne", "global", "corp", "star", "north", "nort", "labs", "blue"]
+_norms = st.lists(st.sampled_from(_TOKENS), min_size=1, max_size=3).map(" ".join)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    surfaces=st.lists(_norms, min_size=1, max_size=40, unique=True),
+    aliases=st.lists(
+        st.tuples(st.integers(0, 12), st.one_of(_norms, st.just(""))),
+        max_size=40, unique=True,
+    ),
+    max_block_size=st.integers(1, 6),
+    me_max_block_size=st.one_of(st.none(), st.integers(2, 12)),
+    neighborhood=st.integers(1, 4),
+    measure=st.sampled_from(["cos", "ip", "l2"]),
+)
+def test_block_kernel_is_invariant_to_key_grouping(
+    surfaces, aliases, max_block_size, me_max_block_size, neighborhood, measure
+):
+    """The kernel over ANY grouping of whole blocking keys — here hash
+    buckets for P in {1, 2, 3, 7}, as the keyed exchange places them —
+    followed by the reduce equals the single-group (in-process) call pair
+    for pair and bit for bit. Low caps make the sorted-neighbourhood and
+    insertion-window branches run."""
+    import zlib
+
+    import numpy as np
+
+    from mix_blink_spark.functions.embed import encode_matrix
+    from mix_blink_spark.operators.localpairs import (
+        block_kernel, keyed_rows, local_pairs, reduce_pairs, stack_rows,
+    )
+
+    surfs = [(f"NORM::{i:03d}", n) for i, n in enumerate(surfaces)]
+    als = [(f"ENT::E{e}", n) for e, n in aliases]
+    s_mat = encode_matrix(surfaces).astype(np.float32)
+    a_mat = encode_matrix([n for _, n in als]).astype(np.float32) if als else None
+    kw = dict(
+        measure=measure, dense_weight=0.5, max_block_size=max_block_size,
+        me_max_block_size=me_max_block_size, neighborhood=neighborhood,
+    )
+    single = local_pairs(surfs, s_mat, als, a_mat, tau_ent=0.6, **kw)
+
+    keys, sides, rids, norms, erow = keyed_rows(surfs, als)
+    emb = stack_rows(s_mat, a_mat)
+    for p in (1, 2, 3, 7):
+        mm_rows, me_rows = [], []
+        for bucket in range(p):
+            sel = [i for i, k in enumerate(keys) if zlib.crc32(k.encode()) % p == bucket]
+            mm, me = block_kernel(
+                [keys[i] for i in sel], [sides[i] for i in sel], [rids[i] for i in sel],
+                [norms[i] for i in sel], erow[sel], emb, **kw,
+            )
+            mm_rows += mm
+            me_rows += me
+        grouped = reduce_pairs(mm_rows, me_rows, 0.6)
+        for got, want in zip(grouped, single):
+            assert len(got) == len(want)
+            assert {r[:2]: r[2:] for r in got} == {r[:2]: r[2:] for r in want}, p

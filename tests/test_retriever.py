@@ -95,24 +95,42 @@ def test_hard_negatives_never_contain_golds(spark, small_index):
     assert ranks == list(range(1, len(ranks) + 1))
 
 
-def test_fused_me_top1_distinguishes_nul_colliding_aliases(spark):
-    """Regression: pandas' string hashtable (factorize / multi-key
-    drop_duplicates / groupby) hashes C-strings and truncates at an
-    embedded NUL — two aliases like 'boreali stechnologies' vs
-    'borealis technologies', whose fused b+NUL+norm_b keys share every
-    byte around the NUL position, silently collapsed to one candidate
-    inside the fused scorer's local dedup. Both must be scored and the
-    argmax must match the unfused window plan."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from mix_blink_spark.functions.embed import encode_matrix
-    from mix_blink_spark.functions.strsim import levenshtein_sim
-    from mix_blink_spark.operators.scoring import (
-        fused_me_top1,
-        make_broadcast_dense_udf,
-        score_pairs,
+def _me_both_placements(spark, surfs, aliases, tau_ent, partitions=(1, 4)):
+    """me winners of the pair-stage block kernel, in-process and through
+    the keyed exchange at each partition count: (local, [distributed])."""
+    from mix_blink_spark.operators.localpairs import (
+        ME, distributed_pairs, local_pairs, stack_rows,
     )
+
+    s_mat = encode_matrix([n for _, n in surfs]).astype(np.float32)
+    a_mat = encode_matrix([n for _, n in aliases]).astype(np.float32)
+    kw = dict(measure="cos", dense_weight=0.5, tau_ent=tau_ent, max_block_size=200,
+              me_max_block_size=None, neighborhood=8)
+    local = local_pairs(surfs, s_mat, aliases, a_mat, mm=False, **kw)[1]
+    records = spark.createDataFrame(
+        [(0, r, n, i) for i, (r, n) in enumerate(surfs)]
+        + [(1, r, n, len(surfs) + i) for i, (r, n) in enumerate(aliases)],
+        "side tinyint, rid string, norm string, idx int",
+    )
+    bc = spark.sparkContext.broadcast(stack_rows(s_mat, a_mat))
+    dist = []
+    for p in partitions:
+        out = distributed_pairs(records, partitions=p, mat_bc=bc, **kw)
+        dist.append({(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
+                     for r in out.filter(F.col("kind") == ME).collect()})
+    return {(r[0], r[1]): r[2:] for r in local}, dist
+
+
+def test_block_kernel_keeps_nul_colliding_aliases_distinct(spark):
+    """Regression: two aliases like 'boreali stechnologies' vs 'borealis
+    technologies' share every byte around an embedded NUL once joined as
+    b + NUL + norm_b — pandas' string hashtable (factorize / multi-key
+    drop_duplicates / groupby) truncates at NUL and once silently
+    collapsed them to one candidate in the me scorer. Both must be
+    scored, in both placements, and the argmax must match the DataFrame
+    scorer (``score_pairs``) over every candidate."""
+    from mix_blink_spark.functions.strsim import levenshtein_sim
+    from mix_blink_spark.operators.scoring import make_broadcast_dense_udf, score_pairs
 
     surf = "boreali stechnologies"  # the mention-side norm
     aliases = [
@@ -123,26 +141,19 @@ def test_fused_me_top1_distinguishes_nul_colliding_aliases(spark):
         ("ENT::E1", "boreali stechnologies"),  # exact -> must win
         ("ENT::E2", "borealis technologies"),
     ]
-    s_ids = {"NORM::s1": 0}
+    local, dist = _me_both_placements(spark, [("NORM::s1", surf)], aliases, 0.0)
+    assert all(d == local for d in dist)
+
     s_mat = encode_matrix([surf]).astype(np.float32)
-    a_ids = {f"{r}\x00{nm}": i for i, (r, nm) in enumerate(aliases)}
     a_mat = encode_matrix([nm for _, nm in aliases]).astype(np.float32)
-    bc_s = spark.sparkContext.broadcast((s_ids, s_mat))
-    bc_e = spark.sparkContext.broadcast((a_ids, a_mat))
-
-    pairs = (
-        spark.createDataFrame(
-            [("NORM::s1", r, surf, nm) for r, nm in aliases],
-            "a string, b string, norm_a string, norm_b string",
-        )
-        # ONE partition: the local dedup only sees rows that share a
-        # partition, and a 3-row default-parallelism frame scatters them
-        .coalesce(1)
-        .withColumn("lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b")))
+    bc_s = spark.sparkContext.broadcast(({"NORM::s1": 0}, s_mat))
+    bc_e = spark.sparkContext.broadcast(
+        ({f"{r}\x00{nm}": i for i, (r, nm) in enumerate(aliases)}, a_mat)
     )
-
-    fused = fused_me_top1(pairs, "cos", 0.5, 0.0, bc_s, bc_e).collect()
-
+    pairs = spark.createDataFrame(
+        [("NORM::s1", r, surf, nm) for r, nm in aliases],
+        "a string, b string, norm_a string, norm_b string",
+    ).withColumn("lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b")))
     dense_udf = make_broadcast_dense_udf("cos", bc_s, bc_e)
     scored = score_pairs(
         pairs.withColumn(
@@ -155,81 +166,50 @@ def test_fused_me_top1_distinguishes_nul_colliding_aliases(spark):
     ).collect()
     best = max(scored, key=lambda r: (r["score"], [-ord(c) for c in r["b"]]))
 
-    assert len(fused) == 1
-    w = fused[0]
-    assert (w["b"], w["score"]) == (best["b"], best["score"])
-    # the exact alias scores jw=1.0; if the NUL-colliding dedup dropped it
+    assert len(local) == 1
+    (a, b), (_dense, jw, _lev, score) = next(iter(local.items()))
+    assert (b, score) == (best["b"], best["score"])
+    # the exact alias scores jw=1.0; if a NUL-colliding dedup dropped it
     # the winner's jw would be < 1
-    assert w["jw"] == 1.0
+    assert jw == 1.0
 
 
-def test_fused_me_top1_mid_stream_drain_path(spark):
-    """The size-capped intermediate drain (drain_rows) must not change the
-    winners: run >2 chunks of candidates through one partition with
-    drain_rows=1 (drain after every chunk) and with the default, and
-    require identical output."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from mix_blink_spark.functions.embed import encode_matrix
-    from mix_blink_spark.functions.strsim import levenshtein_sim
-    from mix_blink_spark.operators.scoring import fused_me_top1
-
+def test_block_kernel_large_me_input(spark):
+    """A large me input — 400 surfaces x 50 aliases all sharing one
+    blocking key, ~20k candidates in one block — gives the same winners
+    in-process and through the keyed exchange at 1 and 4 partitions."""
     n_surf, n_ent = 400, 50
-    surfs = [f"surf number {i}" for i in range(n_surf)]
+    surfs = [(f"NORM::s{i}", f"surf number {i}") for i in range(n_surf)]
     ents = [(f"ENT::E{j}", f"surf number {j * 8 % n_surf}") for j in range(n_ent)]
-    s_ids = {f"NORM::s{i}": i for i in range(n_surf)}
-    s_mat = encode_matrix(surfs).astype(np.float32)
-    a_ids = {f"{r}\x00{nm}": i for i, (r, nm) in enumerate(ents)}
-    a_mat = encode_matrix([nm for _, nm in ents]).astype(np.float32)
-    bc_s = spark.sparkContext.broadcast((s_ids, s_mat))
-    bc_e = spark.sparkContext.broadcast((a_ids, a_mat))
-
-    # ~20k candidate rows -> 3 chunks of 8192 in one partition
-    rows = [
-        (f"NORM::s{i}", r, surfs[i], nm)
-        for i in range(n_surf)
-        for (r, nm) in ents
-    ]
-    pairs = (
-        spark.createDataFrame(
-            rows, "a string, b string, norm_a string, norm_b string"
-        )
-        .coalesce(1)
-        .withColumn("lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b")))
-    )
-
-    def run(drain):
-        out = fused_me_top1(pairs, "cos", 0.5, 0.3, bc_s, bc_e, drain_rows=drain)
-        return {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
-                for r in out.collect()}
-
-    drained = run(1)
-    default = run(200_000)
-    assert drained == default and len(default) > 0
+    local, dist = _me_both_placements(spark, surfs, ents, 0.3)
+    assert len(local) > 0
+    assert all(d == local for d in dist)
 
 
-def test_fused_me_top1_rejects_nul_in_ids(spark):
+def test_block_kernel_rejects_nul_in_ids(spark):
     """NUL-free ids are a CONTRACT (round-6 ADVICE): pandas 2.2 string
-    hashing truncates at embedded NUL, so an entity id containing one would
-    silently collapse distinct entities in the fused kernel's local dedup
-    (and make the b+NUL+norm_b broadcast key ambiguous). The kernel must
-    refuse loudly, not collapse silently."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from mix_blink_spark.functions.strsim import levenshtein_sim
-    from mix_blink_spark.operators.scoring import fused_me_top1
+    hashing truncates at an embedded NUL, so an entity id containing one
+    would silently collapse distinct entities wherever ids are keyed
+    through pandas. The kernel must refuse loudly, in-process and on the
+    row-embedding input of the keyed exchange."""
+    from mix_blink_spark.operators.localpairs import block_kernel, distributed_pairs
 
     emb = [1.0, 0.0, 0.0, 0.0]
-    rows = [
-        ("s1", "E\x001", "acme corp", "acme corporation", emb, emb),
-        ("s1", "E\x002", "acme corp", "acme corporation", emb, emb),
-    ]
-    pairs = spark.createDataFrame(
-        rows,
-        "a string, b string, norm_a string, norm_b string, "
-        "emb_a array<double>, emb_b array<double>",
-    ).withColumn("lev", levenshtein_sim(F.col("norm_a"), F.col("norm_b")))
+    with pytest.raises(ValueError, match="embedded NUL"):
+        block_kernel(
+            ["tk:acme", "tk:acme"], [0, 1], ["s1", "E\x001"], ["acme corp", "acme corporation"],
+            np.array([0, 1]), np.array([emb, emb], np.float32),
+            measure="cos", dense_weight=0.5, max_block_size=200,
+            me_max_block_size=None, neighborhood=8,
+        )
+    records = spark.createDataFrame(
+        [(0, "s1", "acme corp", emb), (1, "E\x001", "acme corporation", emb),
+         (1, "E\x002", "acme corporation", emb)],
+        "side tinyint, rid string, norm string, emb array<float>",
+    )
+    out = distributed_pairs(
+        records, measure="cos", dense_weight=0.5, tau_ent=0.3, max_block_size=200,
+        me_max_block_size=None, neighborhood=8, partitions=2,
+    )
     with pytest.raises(Exception, match="embedded NUL"):
-        fused_me_top1(pairs, "cos", 0.5, 0.3).collect()
+        out.collect()

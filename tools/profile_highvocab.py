@@ -27,7 +27,7 @@ def main() -> None:
     from mix_blink_spark.fixtures import distributed_corpus
     from mix_blink_spark.plans.pipeline import LinkConfig, link
 
-    pages_n, ents_n, wide, split = 60000, 20000, False, False
+    pages_n, ents_n, wide = 60000, 20000, False
     args = sys.argv[1:]
     i = 0
     while i < len(args):
@@ -37,15 +37,8 @@ def main() -> None:
             ents_n = int(args[i + 1]); i += 2
         elif args[i] == "--wide":
             wide = True; i += 1
-        elif args[i] == "--split-pairgen":
-            # round-7 verdict item 4: materialize candidate rows before
-            # scoring so the stage log splits generation from scoring
-            split = True; i += 1
         else:
             i += 1
-    if split:
-        os.environ["SPARK_GRAFT_PROFILE_PAIRGEN"] = "1"
-
     spark = bench._session(8)
     root = os.environ["SPARK_GRAFT_CORPUS_DIR"]
     path = f"{root}-{pages_n}-{ents_n}" + ("-wide" if wide else "")
