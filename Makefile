@@ -4,7 +4,8 @@
 #                        + full pytest + a smoke bench at sf0.001
 #   make gate          — oracle gate only (~2 min)
 #   make test          — the tier-1 pytest command (~15 min)
-#   make perf          — benchmark self-tests + one er_vocab benchmark run
+#   make perf          — benchmark self-tests + one er_scan and one er_vocab
+#                        benchmark run (seed 7)
 #   make smoke         — tiny-corpus bench only (~1 min)
 #   make bench         — the full driver-protocol bench at sf0.1
 #                        (what the driver runs; ~10 min + probes)
@@ -32,6 +33,7 @@ test:
 
 perf:
 	python3 -m pytest perfbench/tests -q
+	python3 perfbench/run.py --workload er_scan --seed 7 --seconds 16 --trace 0
 	python3 perfbench/run.py --workload er_vocab --seed 7 --seconds 16 --trace 0
 
 smoke:

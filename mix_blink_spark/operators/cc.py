@@ -31,6 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# edge count up to which connected_components collects the edges and runs
+# a driver union-find instead of the star loop
+SMALL_GRAPH_THRESHOLD = 500_000
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     return (
@@ -117,7 +121,7 @@ def connected_components(
     max_iterations: int = 50,
     checkpoint: bool = False,
     verbose: bool = False,
-    small_graph_threshold: int = 500_000,
+    small_graph_threshold: int = SMALL_GRAPH_THRESHOLD,
     stats: dict | None = None,
     n_edges_hint: int | None = None,
 ) -> DataFrame:
@@ -177,9 +181,13 @@ def connected_components(
                 print(f"[cc] local union-find: {len(pairs)} edges, {len(assign)} nodes")
             if stats is not None:
                 stats.update({"mode": "local-unionfind", "iterations": 0})
-            if not assign:
-                return spark.createDataFrame([], "member string, cluster_id string")
-            return spark.createDataFrame(assign, "member string, cluster_id string")
+            import pandas as pd
+
+            # pandas goes over Arrow: no Python-worker stage unpickles a list
+            return spark.createDataFrame(
+                pd.DataFrame(assign, columns=["member", "cluster_id"]),
+                "member string, cluster_id string",
+            )
 
     e = _ckpt(canon)
     prev_sig = None

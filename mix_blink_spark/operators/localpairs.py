@@ -56,6 +56,7 @@ from .scoring import _dense_np
 MM, ME = 0, 1
 # reduced pair rows, the schema of the pipeline's pairs_mm / pairs_me
 PAIRS_SCHEMA = "a string, b string, dense double, jw double, lev double, score double"
+PAIRS_COLUMNS = ["a", "b", "dense", "jw", "lev", "score"]
 # kernel output: both pair kinds, tagged; norm_b is the me tie-break (null
 # for mm). The reduce drops it.
 _KERNEL_PA = pa.schema(

@@ -34,13 +34,21 @@ same pairs bit for bit.
 Scale notes (100 TB):
   - the only wide rows (``html``) die immediately after text extraction
     (column pruning — verified in tests via the explained plan);
-  - surfaces and aliases are dimension-sized: their embeddings ride one
-    broadcast matrix up to ``broadcast_dense_limit`` surfaces, and the
-    pair-stage records beyond it;
+  - surfaces and aliases are dimension-sized: up to
+    ``broadcast_dense_limit`` surfaces they reach the driver in ONE
+    bounded, side-tagged collect (the action that also fills the mention
+    cache), are encoded there, and their embeddings ride one broadcast
+    matrix; beyond it the surfaces stay distributed and the pair-stage
+    records carry their vectors;
   - the pair stage shuffles records once by blocking key, with the size
     cap / sorted-neighbourhood skew guard applied per block;
-  - CC runs on the (much smaller) above-threshold edge set with
-    checkpointed iterations.
+  - at dimension scale the edges reach the driver once (in-process pairs
+    never leave it; keyed-exchange edges come back in one Arrow collect)
+    and ONE driver union-find clusters them, up to CC's small-graph
+    threshold; past it, and beyond ``broadcast_dense_limit``, CC runs
+    its checkpointed star loop on the above-threshold edge set;
+  - driver-side rows return to Spark as pandas over Arrow, never as a
+    pickled Python list.
 """
 
 from __future__ import annotations
@@ -52,17 +60,18 @@ from pyspark.sql import functions as F
 
 from ..functions.embed import encode
 from ..functions.text import normalize_surface
-from ..operators.cc import connected_components
+from ..operators.cc import SMALL_GRAPH_THRESHOLD, _unionfind_local, connected_components
 from ..operators.localpairs import (
     ME,
     MM,
+    PAIRS_COLUMNS,
     PAIRS_SCHEMA,
     distributed_pairs,
     local_pairs,
     stack_rows,
 )
 from ..operators.scoring import check_measure
-from ..sources.dictionary import explode_surfaces, with_nil
+from ..sources.dictionary import explode_surfaces
 from ..sources.pages import mentions_from_spans, with_extracted_text
 from .resume import StageStore
 
@@ -120,7 +129,9 @@ class LinkConfig:
     # broadcast variable) and its records carry only a row index — ~0.25
     # KB/row less shuffle + Arrow traffic. Above it the records carry
     # their vectors through the exchange (scales to any vocabulary).
-    # 500k rows x 64 float32 = 128 MB.
+    # 500k rows x 64 float32 = 128 MB. It also bounds the surfaces
+    # collect: at most this many + 1 surface rows reach the driver before
+    # link() falls back to the distributed plan.
     broadcast_dense_limit: int = 500_000
     # S8 integration: directory of an EntityIndexStore holding the
     # pre-encoded alias index (ord, id, norm, emb). When set, link() LOADS
@@ -134,7 +145,7 @@ class LinkConfig:
     alias_store: str | None = None
     # placement of the pair stage's block kernel: up to this many
     # (surfaces + aliases) it runs in-process on the driver over ONE group
-    # — no Spark job, and the edges + union-find stay on the driver too.
+    # — no Spark job, and its edges go straight to the driver union-find.
     # Above it, the same kernel runs behind one keyed exchange (records
     # exploded over blocking keys, repartitioned by key, one kernel call
     # per partition, one reduce keyed by surface) — a handful of jobs
@@ -290,9 +301,9 @@ def link(
     if store is None:
         m_narrow = m_narrow.persist()
 
-    # dimension side: dictionary surfaces (with NIL dropped from surfaces)
+    # dimension side: dictionary surfaces (NIL has none)
     ent_surfaces = (
-        explode_surfaces(with_nil(entities))
+        explode_surfaces(entities)
         .withColumn("norm", normalize_surface(F.col("surface")))
         .withColumn("rid", F.concat(F.lit(ENT_PREFIX), F.col("id")))
         .select("rid", "id", "surface", "norm")
@@ -306,24 +317,6 @@ def link(
             .distinct()
             .withColumn("rid", F.concat(F.lit(NORM_PREFIX), F.md5("norm")))
         )
-
-    # eager-materialize the heavy shared subtree once (persist alone is
-    # lazy); downstream dimension-scale frames read this cache
-    _t0 = _time.monotonic()
-    surfaces0 = stage("surfaces", make_surfaces).persist()
-    # single materialization of the heavy upstream (scan+extract+join):
-    # count AFTER persist, then the coalesce below reads from cache
-    n_surf = surfaces0.count()
-    # dimension-scale data runs on few partitions: each Python-UDF task has
-    # a fixed Arrow/worker cost, so 625 surfaces across 32 partitions is
-    # ~10x slower than across 1 (measured); fact-scale stages keep full
-    # parallelism. The alias table is partitioned the same way (n_surf is
-    # its size proxy — no dedicated count job). No second persist/count:
-    # re-reading the surfaces0 cache through a coalesce is cheaper than
-    # another action per run.
-    p_surf = max(1, min(spark.sparkContext.defaultParallelism, n_surf // 2000 + 1))
-    surfaces = surfaces0.coalesce(p_surf)
-    mark(f"surfaces materialize (n={n_surf}, p={p_surf})", _t0)
 
     # S8: a COMMITTED alias store is the single source of truth for the
     # dictionary side in EVERY regime — blocking, dense lookup, and the
@@ -349,6 +342,38 @@ def link(
         else ent_surfaces.select("rid", "norm").distinct()
     )
 
+    # The dimension side reaches the driver in ONE side-tagged collect:
+    # the distinct surfaces, at most broadcast_dense_limit + 1 of them,
+    # and the alias records. It is also the action that fills the
+    # m_narrow cache (scan, extraction and span join run once), so no
+    # count job precedes it. With a StageStore, a committed alias store or
+    # a custom encoder, or past the limit, the surfaces are persisted and
+    # counted instead and those plans run as before.
+    def side_tagged(surfs: DataFrame) -> DataFrame:
+        return surfs.select(F.lit(0).alias("side"), "rid", "norm").unionByName(
+            alias_records.select(F.lit(1).alias("side"), "rid", "norm")
+        )
+
+    _t0 = _time.monotonic()
+    surfaces0 = stage("surfaces", make_surfaces)
+    bpdf = None
+    if store is None and store_idx is None and cfg.encoder is None:
+        bpdf = side_tagged(surfaces0.limit(cfg.broadcast_dense_limit + 1)).toPandas()
+        n_surf = int((bpdf["side"] == 0).sum())
+        if n_surf > cfg.broadcast_dense_limit:
+            bpdf = None
+    if bpdf is None:
+        surfaces0 = surfaces0.persist()
+        n_surf = surfaces0.count()
+    # dimension-scale data runs on few partitions: each Python-UDF task has
+    # a fixed Arrow/worker cost, so 625 surfaces across 32 partitions is
+    # ~10x slower than across 1 (measured); fact-scale stages keep full
+    # parallelism. The alias table is partitioned the same way (n_surf is
+    # its size proxy — no dedicated count job).
+    p_surf = max(1, min(spark.sparkContext.defaultParallelism, n_surf // 2000 + 1))
+    surfaces = surfaces0.coalesce(p_surf)
+    mark(f"surfaces materialize (n={n_surf}, p={p_surf})", _t0)
+
     _t0 = _time.monotonic()
     s_embs = _with_emb(surfaces.select("rid", "norm"), enc=cfg.encoder)
     # resumable runs with BOTH pair stages already committed skip every
@@ -363,20 +388,18 @@ def link(
     spdf = apdf = None
     s_rows: list | None = None
     if use_bc:
-        # The encoder kernel (one eager action) runs as a Spark job either
-        # way; at dimension scale its RESULT is collected into one
-        # broadcast matrix so pair-stage records carry only a row index —
+        # At dimension scale the embeddings form one driver-side matrix
+        # (broadcast when the pair stage runs behind the exchange), so
+        # pair-stage records carry only a row index —
         # the north_star's "embedding index as a broadcast variable".
         # Above the limit (vocabularies past driver memory) the vectors
         # stay distributed and ride the records instead.
         #
         # alias dimension table: the committed store's rows when loaded
         # (S8 reuse — no re-encode; the SAME rows the pair stage blocks
-        # on), else alias_records encoded as a Spark job and committed to
-        # the store if one was given. Without a store, surfaces and
-        # aliases encode + collect in ONE side-tagged Spark job instead of
-        # two: at dimension scale each toPandas round trip is mostly fixed
-        # job overhead (round 5).
+        # on), else alias_records, committed to the store if one was
+        # given. Surfaces and aliases come back in ONE side-tagged
+        # collect: the bounded one above when it ran, else one here.
         if store_idx is not None:
             spdf = s_embs.select("rid", "norm", "emb").toPandas()
             apdf = (
@@ -385,38 +408,26 @@ def link(
                 .toPandas()
             )
         else:
-            both = (
-                surfaces.select("rid", "norm")
-                .withColumn("side", F.lit(0))
-                .unionByName(
-                    alias_records.coalesce(p_surf).withColumn("side", F.lit(1))
-                )
-                # the union carries 2 x p_surf partitions; at dimension
-                # scale that's 2 sequential ~0.5s-fixed-cost UDF tasks for
-                # ~1k tiny rows — collapse to the intended parallelism
-                .coalesce(p_surf)
-            )
+            if bpdf is None:
+                # at dimension scale the union's many partitions would be
+                # sequential ~0.5s-fixed-cost UDF tasks for ~1k tiny rows —
+                # collapse to the intended parallelism
+                both = side_tagged(surfaces).coalesce(p_surf)
+                if cfg.encoder is not None:
+                    # a custom encoder keeps its UDF job: its batch_fn may
+                    # need worker-side state (HF weights) by design
+                    both = _with_emb(both, enc=cfg.encoder)
+                bpdf = both.toPandas()
             if cfg.encoder is None:
                 # default trigram encoder: its batch kernel
                 # (functions.embed.encode_matrix) is importable driver-side,
-                # so at dimension scale the rows come back in ONE collect
-                # job with NO Arrow-UDF stage and the encode runs here —
+                # so the encode runs here with NO Arrow-UDF stage —
                 # bit-identical float32 rows (same kernel, same None→""
-                # fold as the pandas_udf wrapper). A custom cfg.encoder
-                # keeps the UDF job: its batch_fn may need worker-side
-                # state (HF weights) by design.
+                # fold as the pandas_udf wrapper)
                 from ..functions.embed import encode_matrix
 
-                bpdf = both.select("side", "rid", "norm").toPandas()
-                _bmat = encode_matrix(
-                    [s if s is not None else "" for s in bpdf["norm"]]
-                )
-                bpdf["emb"] = list(_bmat)
-            else:
-                bpdf = (
-                    _with_emb(both, enc=cfg.encoder)
-                    .select("side", "rid", "norm", "emb")
-                    .toPandas()
+                bpdf["emb"] = list(
+                    encode_matrix([s if s is not None else "" for s in bpdf["norm"]])
                 )
             spdf = bpdf[bpdf["side"] == 0].reset_index(drop=True)
             apdf = bpdf[bpdf["side"] == 1].reset_index(drop=True)
@@ -514,7 +525,11 @@ def link(
     def pair_frame(kind: int) -> DataFrame:
         st = pair_stage()
         if "local" in st:
-            return spark.createDataFrame(st["local"][kind], PAIRS_SCHEMA)
+            import pandas as pd
+
+            return spark.createDataFrame(
+                pd.DataFrame(st["local"][kind], columns=PAIRS_COLUMNS), PAIRS_SCHEMA
+            )
         return st["df"].filter(F.col("kind") == kind).drop("kind")
 
     pairs_mm = stage("pairs_mm", lambda: pair_frame(MM))
@@ -560,24 +575,28 @@ def link(
     n_edges: int | None = None
     local_assign: list[tuple[str, str]] | None = None
     edges_persisted = False
-    if store is None and "local" in _pairs:
-        # the pair rows never left the driver in this regime, so edges and
-        # the union-find run here directly — skipping the edges count job,
-        # CC's collect job, and the pair-cache re-read. Same contract as
-        # connected_components' driver path (self-loops dropped, min-id
-        # cluster ids); the returned `edges` DataFrame is definitionally
-        # the same rows (make_edges over the createDataFrame'd local rows).
-        from ..operators.cc import _unionfind_local
-
+    if store is None and use_bc:
+        # dimension scale: the surface rows are on the driver already, so
+        # the edges come here too and one driver union-find (the contract
+        # of connected_components' small-graph path: self-loops dropped,
+        # min-id cluster ids) replaces the edges persist + count and CC's
+        # re-canonicalise + collect. In-process pairs never left the
+        # driver; keyed-exchange edges arrive in one Arrow collect,
+        # bounded by CC's small-graph threshold — past it the star loop
+        # below runs instead.
         _t0 = _time.monotonic()
-        mm_rows, me_rows = _pairs["local"]
-        edge_rows = [
-            (r[0], r[1]) for r in mm_rows if r[5] >= cfg.tau_mm and r[0] != r[1]
-        ] + [(r[0], r[1]) for r in me_rows if r[0] != r[1]]
-        n_edges = len(edge_rows)
-        local_assign = _unionfind_local(edge_rows)
-        mark(f"edges local (n={n_edges})", _t0)
-    elif store is None:
+        if "local" in _pairs:
+            mm_rows, me_rows = _pairs["local"]
+            edge_rows = [(r[0], r[1]) for r in mm_rows if r[5] >= cfg.tau_mm] + [
+                (r[0], r[1]) for r in me_rows
+            ]
+        else:
+            tbl = edges.limit(SMALL_GRAPH_THRESHOLD + 1).toArrow()
+            edge_rows = list(zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()))
+        if len(edge_rows) <= SMALL_GRAPH_THRESHOLD:
+            local_assign = _unionfind_local([(a, b) for a, b in edge_rows if a != b])
+        mark(f"edges local (n={len(edge_rows)})", _t0)
+    if store is None and local_assign is None:
         # CC takes several actions over edges (size probe, collect/loop)
         # and the cluster projection re-reads them; without a persist the
         # whole pair-scoring DAG re-executes per action (measured: the
@@ -601,9 +620,14 @@ def link(
             # driver-local in this regime, so the surface->cluster map is a
             # dict lookup — the same left-join-with-rid-fallback semantics
             # as below without the join job + its broadcast-build chain
+            import pandas as pd
+
             amap = dict(local_assign)
             surf_assign = spark.createDataFrame(
-                [(nm, amap.get(r, r)) for r, nm in s_rows],
+                pd.DataFrame(
+                    [(nm, amap.get(r, r)) for r, nm in s_rows],
+                    columns=["norm", "cluster_id"],
+                ),
                 "norm string, cluster_id string",
             )
         else:

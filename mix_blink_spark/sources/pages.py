@@ -338,8 +338,13 @@ def read_pages_extracted_python(
     # partition, so tasks amortize that cost over many row groups; keep
     # 2x defaultParallelism partitions (floor 16 so the downstream
     # io_slots coalesce and speculation still have granularity to work
-    # with). Row groups are uniformly sized, round-robin spread — balance
-    # is unchanged.
+    # with). The splits are ``spark.range`` ids born in n_parts contiguous
+    # partitions, and gen() looks each id up in ``frags`` (shipped with
+    # the function, as a broadcast past PySpark's command-size threshold):
+    # no Python stage to unpickle a split list and no shuffle to spread
+    # it. Contiguous ranges keep a file's row groups in one task (one
+    # footer parse); row groups are uniformly sized, so balance is
+    # unchanged.
     dp = spark.sparkContext.defaultParallelism
     n_parts = min(len(frags), max(2 * dp, 16))
     # resolved at plan time on the driver (closure-captured): worker env
@@ -361,9 +366,7 @@ def read_pages_extracted_python(
     # page-cache-resident uncompressed layouts where the reader is the
     # bottleneck.
     _plain_decode = _os.environ.get("SPARK_GRAFT_PLAIN_DECODE", "0") == "1"
-    splits = spark.createDataFrame(
-        frags, "path string, rg int, pkeys string"
-    ).repartition(n_parts)
+    splits = spark.range(len(frags), numPartitions=n_parts)
 
     out_cols = list(columns) + ["text"]
 
@@ -474,62 +477,71 @@ def read_pages_extracted_python(
             mm_cache[p] = ctx
             return ctx
 
-        for pdf in batches:
-            for path_, rg, pk_json in zip(pdf["path"], pdf["rg"], pdf["pkeys"]):
-                pkeys = _json.loads(pk_json)
-                phys_cols = [c for c in columns if c not in pkeys]
-                # memory_map + decode straight off the Arrow buffers: the
-                # buffered read()+to_pandas+bytes() path moves the heavy
-                # html column through three extra copies, and its kernel
-                # time COLLAPSES under reader concurrency on this class of
-                # host (measured, bench_artifacts/scan_ceiling_r5.json:
-                # sys-time 23s -> 1,833s from 4 to 32 readers; 10.3k ->
-                # 3.5k pages/s). mmap reads decompress straight from the
-                # page cache and the per-value buffer slice is the ONLY
-                # materialized copy before decode: same kernel scales
-                # near-linearly (14.9k -> 59.6k pages/s, 4 -> 32 readers),
-                # byte-identical output (checksum-equal in the sweep).
-                pf = pfile(path_)
-                decoded = None
-                if _plain_decode:
-                    ctx = plain_ctx(path_, pf)
-                    if ctx is not None:
-                        from .plainscan import plain_decode_utf8
+        try:
+            for pdf in batches:
+                for split in pdf["id"]:
+                    path_, rg, pk_json = frags[split]
+                    pkeys = _json.loads(pk_json)
+                    phys_cols = [c for c in columns if c not in pkeys]
+                    # memory_map + decode straight off the Arrow buffers: the
+                    # buffered read()+to_pandas+bytes() path moves the heavy
+                    # html column through three extra copies, and its kernel
+                    # time COLLAPSES under reader concurrency on this class of
+                    # host (measured, bench_artifacts/scan_ceiling_r5.json:
+                    # sys-time 23s -> 1,833s from 4 to 32 readers; 10.3k ->
+                    # 3.5k pages/s). mmap reads decompress straight from the
+                    # page cache and the per-value buffer slice is the ONLY
+                    # materialized copy before decode: same kernel scales
+                    # near-linearly (14.9k -> 59.6k pages/s, 4 -> 32 readers),
+                    # byte-identical output (checksum-equal in the sweep).
+                    pf = pfile(path_)
+                    decoded = None
+                    if _plain_decode:
+                        ctx = plain_ctx(path_, pf)
+                        if ctx is not None:
+                            from .plainscan import plain_decode_utf8
 
-                        rgm = pf.metadata.row_group(int(rg))
-                        decoded = plain_decode_utf8(
-                            ctx[0], rgm.column(ctx[1]), rgm.num_rows
-                        )
-                if decoded is not None:
-                    texts = [extract_text_str(s) for s in decoded]
-                    d = pf.read_row_group(
-                        int(rg), columns=phys_cols, use_threads=use_threads
-                    ).to_pandas()
-                else:
-                    tbl = pf.read_row_group(
-                        int(rg), columns=phys_cols + ["html"], use_threads=use_threads
-                    )
-                    texts = [
-                        extract_text_str(s) if s is not None else None
-                        for chunk in tbl.column("html").chunks
-                        for s in decode_chunk(chunk)
-                    ]
-                    d = tbl.drop_columns("html").to_pandas()
-                for c in columns:
-                    if c in pkeys:  # partition-key constant for this fragment
-                        v = pkeys[c]
-                        if v is not None and c in pk_date_cols:
-                            v = _datetime.date.fromisoformat(v)
-                        elif v is not None and c in pk_ts_cols:
-                            v = _datetime.datetime.strptime(
-                                v, "%Y-%m-%d %H:%M:%S"
+                            rgm = pf.metadata.row_group(int(rg))
+                            decoded = plain_decode_utf8(
+                                ctx[0], rgm.column(ctx[1]), rgm.num_rows
                             )
-                        d[c] = v
-                for c in str_fallback:
-                    if c not in pkeys:  # pkeys values are already str here
-                        d[c] = d[c].map(str, na_action="ignore")
-                d["text"] = texts
-                yield d[out_cols]
+                    if decoded is not None:
+                        texts = [extract_text_str(s) for s in decoded]
+                        d = pf.read_row_group(
+                            int(rg), columns=phys_cols, use_threads=use_threads
+                        ).to_pandas()
+                    else:
+                        tbl = pf.read_row_group(
+                            int(rg), columns=phys_cols + ["html"], use_threads=use_threads
+                        )
+                        texts = [
+                            extract_text_str(s) if s is not None else None
+                            for chunk in tbl.column("html").chunks
+                            for s in decode_chunk(chunk)
+                        ]
+                        d = tbl.drop_columns("html").to_pandas()
+                    for c in columns:
+                        if c in pkeys:  # partition-key constant for this fragment
+                            v = pkeys[c]
+                            if v is not None and c in pk_date_cols:
+                                v = _datetime.date.fromisoformat(v)
+                            elif v is not None and c in pk_ts_cols:
+                                v = _datetime.datetime.strptime(
+                                    v, "%Y-%m-%d %H:%M:%S"
+                                )
+                            d[c] = v
+                    for c in str_fallback:
+                        if c not in pkeys:  # pkeys values are already str here
+                            d[c] = d[c].map(str, na_action="ignore")
+                    d["text"] = texts
+                    yield d[out_cols]
+        finally:
+            # the PLAIN decoder's mmaps and file handles live as long as
+            # the task's scan, not the worker process
+            for ctx in mm_cache.values():
+                if ctx is not None:
+                    ctx[0].close()
+                    ctx[2].close()
 
     schema = ", ".join(f"{c} {col_ddl.get(c, 'string')}" for c in out_cols)
     return splits.mapInPandas(gen, schema)

@@ -205,52 +205,93 @@ def test_link_parquet_path_parity(spark, tmp_path):
 
 
 def test_rowemb_parity_beyond_broadcast(spark):
-    """broadcast_dense_limit=0 forces the row-embedding input of the pair
-    stage — the beyond-broadcast vocabulary regime, where records carry
-    their vectors through the keyed exchange. Its me pairs must equal the
-    broadcast-matrix regime's, bit for bit."""
+    """A broadcast_dense_limit below the surface count forces the
+    row-embedding input of the pair stage — the beyond-broadcast
+    vocabulary regime, where records carry their vectors through the keyed
+    exchange. The bounded surfaces collect must give up at limit + 1 rows
+    and fall back to that regime: its me pairs must equal the
+    broadcast-matrix regime's, bit for bit, and its clusters the
+    in-process placement's."""
     from mix_blink_spark.fixtures import corpus_dfs
 
     pages, ents, golds, _ = corpus_dfs(spark, seed=23, n_pages=250, n_entities=20)
     spans = golds.select("url", "mention_id", "start", "end")
 
-    def run(limit):
-        cfg = LinkConfig(driver_pairs_limit=0, broadcast_dense_limit=limit)
+    def run(dense_limit, pairs_limit=0):
+        cfg = LinkConfig(driver_pairs_limit=pairs_limit, broadcast_dense_limit=dense_limit)
         out = link(spark, pages, spans, ents, cfg)
-        return {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
-                for r in out["pairs_me"].collect()}
+        me = {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
+              for r in out["pairs_me"].collect()}
+        return me, {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
 
-    rowemb = run(0)
-    assert rowemb == run(500_000)
-    assert len(rowemb) > 0
+    bc_me, _ = run(500_000)
+    _, local_cl = run(500_000, pairs_limit=50_000)
+    for dense_limit in (0, 5):
+        me, cl = run(dense_limit)
+        assert me == bc_me, dense_limit
+        assert cl == local_cl, dense_limit
+    assert len(bc_me) > 0
 
 
-# jobs one keyed-exchange link() submits on the corpus below: 22 with the
-# block kernel (local[4]); the DataFrame blocking + scoring DAG it
-# replaced ran 38
-LINK_JOB_CEILING = 25
+def _link_jobs(spark, pages, spans, ents, cfg):
+    """link()'s output and the number of Spark jobs it ran, counted by job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"link-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "link() job count")
+    try:
+        out = link(spark, pages, spans, ents, cfg)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(jobs)
+
+
+# jobs one keyed-exchange link() submits on the corpus below (local[4]):
+# 12 with one collect per side; 22 with the surfaces count, the edges
+# persist + count and CC's collect; 38 with the DataFrame blocking +
+# scoring DAG before the block kernel
+LINK_JOB_CEILING = 13
 
 
 def test_distributed_link_job_count(spark):
     """A ceiling on the Spark jobs one link() runs with the pair stage on
-    the keyed exchange (driver_pairs_limit=0), counted by job group — so a
-    change cannot quietly bring back a many-job pair DAG."""
+    the keyed exchange (driver_pairs_limit=0) — so a change cannot quietly
+    bring back a many-job pair DAG or a dimension-scale tail."""
     from mix_blink_spark.fixtures import corpus_dfs
 
     pages, ents, golds, _ = corpus_dfs(spark, seed=29, n_pages=300, n_entities=30)
     for df in (pages, ents, golds):
         df.cache().count()
     spans = golds.select("url", "mention_id", "start", "end")
-    sc = spark.sparkContext
-    sc.setJobGroup("link-job-count", "distributed-placement link()")
-    try:
-        out = link(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=0))
-        jobs = sc.statusTracker().getJobIdsForGroup("link-job-count")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    out, jobs = _link_jobs(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=0))
     assert out["clusters"].count() > 0
-    assert 0 < len(jobs) <= LINK_JOB_CEILING, len(jobs)
+    assert 0 < jobs <= LINK_JOB_CEILING, jobs
+
+
+# jobs one in-process link() over a parquet-path pages input submits on
+# the corpus below (local[4]): 9 with the range-born scan splits and one
+# collect per side; 13 with the split list shuffled and the surfaces count
+SCAN_LINK_JOB_CEILING = 10
+
+
+def test_parquet_scan_link_job_count(spark, tmp_path):
+    """A ceiling on the Spark jobs of the scan-led shape: pages as a
+    parquet path (the python-direct reader), spans broadcast, the pair
+    stage in-process."""
+    pages, ents, golds, _ = corpus_dfs(spark, seed=31, n_pages=300, n_entities=30)
+    pq_dir = str(tmp_path / "pages_pq")
+    pages.write.parquet(pq_dir)
+    for df in (ents, golds):
+        df.cache().count()
+    spans = golds.select("url", "mention_id", "start", "end")
+    cfg = LinkConfig(broadcast_spans=True)
+    out, jobs = _link_jobs(spark, pq_dir, spans, ents, cfg)
+    assert out["clusters"].count() == golds.count()
+    assert 0 < jobs <= SCAN_LINK_JOB_CEILING, jobs
 
 
 @pytest.fixture(scope="module")

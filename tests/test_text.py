@@ -114,9 +114,11 @@ def test_python_direct_reader_byte_identical(spark, tmp_path):
     std = with_extracted_text(spark.read.parquet(path)).select(
         "url", F.col("extracted_text").alias("t_std")
     )
-    new = read_pages_extracted_python(spark, path).select(
-        "url", F.col("text").alias("t_new"), "warc_ts", "lang"
-    )
+    scan = read_pages_extracted_python(spark, path)
+    # the splits are born partitioned: nothing shuffles below the scan
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+    new = scan.select("url", F.col("text").alias("t_new"), "warc_ts", "lang")
     j = std.join(new, "url")
     assert j.count() == 120
     assert j.filter(F.col("t_std") != F.col("t_new")).count() == 0
