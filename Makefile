@@ -6,6 +6,8 @@
 #   make test          — the tier-1 pytest command (~15 min)
 #   make perf          — benchmark self-tests + one er_scan and one er_vocab
 #                        benchmark run (seed 7)
+#   make ab PARENT=dir — paired benchmark runs of a parent checkout against
+#                        this one (WORKLOAD=er_vocab, SEEDS=411-420)
 #   make smoke         — tiny-corpus bench only (~1 min)
 #   make bench         — the full driver-protocol bench at sf0.1
 #                        (what the driver runs; ~10 min + probes)
@@ -17,7 +19,7 @@ SF_DIR ?= /root/testdata/sf0.01
 SMOKE_SF_DIR ?= /root/testdata/sf0.001
 PY ?= python
 
-.PHONY: verify gate test perf smoke bench
+.PHONY: verify gate test perf ab smoke bench
 
 verify: gate test smoke
 	@echo "verify: oracle gate + pytest + smoke bench all green"
@@ -35,6 +37,13 @@ perf:
 	python3 -m pytest perfbench/tests -q
 	python3 perfbench/run.py --workload er_scan --seed 7 --seconds 16 --trace 0
 	python3 perfbench/run.py --workload er_vocab --seed 7 --seconds 16 --trace 0
+
+# alternating parent/change benchmark pairs: medians, quartiles, pairs won
+WORKLOAD ?= er_vocab
+SEEDS ?= 411-420
+ab:
+	@test -n "$(PARENT)" || { echo "usage: make ab PARENT=<parent checkout> [WORKLOAD=..] [SEEDS=..]"; exit 2; }
+	$(PY) tools/ab_pairs.py $(PARENT) . --workload $(WORKLOAD) --seeds $(SEEDS)
 
 smoke:
 	SPARK_GRAFT_SF_DIR=$(SMOKE_SF_DIR) SPARK_GRAFT_SCALING=0 \

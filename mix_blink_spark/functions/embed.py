@@ -39,21 +39,33 @@ def _grams(s: str, n: int = 3) -> list[bytes]:
     return [padded[i : i + n].encode("utf-8") for i in range(len(padded) - n + 1)]
 
 
-def encode_one(s: str, dim: int = DIM) -> np.ndarray:
+def _encode(s: str, dim: int, memo: dict) -> np.ndarray:
+    """``memo``: gram -> (bucket, +-1), shared by the strings of one call so
+    each distinct gram is hashed once. The +-1 sums are exact integers, so
+    a row does not depend on what the memo already held."""
     v = np.zeros(dim, dtype=np.float64)
     for g in _grams(s):
-        h = int.from_bytes(blake2b(g, digest_size=8, key=b"mbs-enc").digest(), "big")
-        sign = 1.0 if (h >> 63) & 1 else -1.0
-        v[h % dim] += sign
+        slot = memo.get(g)
+        if slot is None:
+            h = int.from_bytes(blake2b(g, digest_size=8, key=b"mbs-enc").digest(), "big")
+            slot = memo[g] = (h % dim, 1.0 if (h >> 63) & 1 else -1.0)
+        v[slot[0]] += slot[1]
     norm = float(np.linalg.norm(v))
     if norm > 0:
         v /= norm
     return v.astype(np.float32)
 
 
+def encode_one(s: str, dim: int = DIM) -> np.ndarray:
+    return _encode(s, dim, {})
+
+
 def encode_matrix(texts: list[str], dim: int = DIM) -> np.ndarray:
     """(len(texts), dim) float32, L2-normalized rows."""
-    return np.stack([encode_one(t, dim) for t in texts]) if texts else np.zeros((0, dim), np.float32)
+    if not texts:
+        return np.zeros((0, dim), np.float32)
+    memo: dict = {}
+    return np.stack([_encode(t, dim, memo) for t in texts])
 
 
 @pandas_udf(ArrayType(FloatType()))

@@ -12,10 +12,11 @@ Two key families (BASELINE.json north_star stage 1):
 ``operators.localpairs.record_keys`` computes the same keys in Python.
 
 ``link()``'s pair stage does not use this module's generators: it is one
-block kernel (``operators.localpairs``) in two placements — in-process
-over one group at dimension scale, or behind one keyed exchange (records
-exploded over these keys, one repartition by key, the kernel per
-partition, one reduce keyed by surface). ``candidate_pairs`` and
+block kernel (``operators.localpairs``) in three placements — in-process
+over one group or as driver-planned bins of whole keys (one job) at
+dimension scale, or behind one keyed exchange past it (records exploded
+over these keys, one repartition by key, the kernel per partition, one
+reduce keyed by surface). ``candidate_pairs`` and
 ``cross_family_pairs`` express the same per-key rules as joins and
 windows; the incremental cross-batch step (``streaming.incremental``)
 and the standalone benchmark layers still call them.

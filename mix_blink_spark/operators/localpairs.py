@@ -1,4 +1,4 @@
-"""The pair stage: one block kernel for blocking + pair scoring, two placements.
+"""The pair stage: one block kernel for blocking + pair scoring, three placements.
 
 Stage 2 of the pipeline (blocking → pairwise scoring) is ONE numpy
 kernel, ``block_kernel``. It takes rows ``(key, side, rid, norm, emb)``
@@ -6,21 +6,36 @@ kernel, ``block_kernel``. It takes rows ``(key, side, rid, norm, emb)``
 dictionary alias — for any set of WHOLE blocking keys, and returns the
 surface↔surface (mm) pairs and each surface's best surface→alias (me)
 candidate. ``reduce_pairs`` then collapses what several keys (or several
-groups of keys) produced. The kernel runs in two placements:
+groups of keys) produced. The kernel runs in three placements:
 
   - **in-process** (``local_pairs``): every record as one group, on the
-    driver. The dimension-scale regime (``LinkConfig.driver_pairs_limit``):
-    no Spark job at all, and each record's keys are computed once for
-    both pair kinds.
-  - **keyed exchange** (``distributed_pairs``): one ``mapInArrow``
-    explodes the records over their keys, ONE ``repartition`` by key puts
-    every block whole on one task, one ``mapInArrow`` runs the kernel per
-    partition, and one reduce keyed by surface finishes. This is the
-    partition-by-signature, verify-locally scheme of distributed
-    similarity joins (EDBT 2020), run as a few large Arrow batches rather
-    than a DAG of small UDF boundaries (CIDR 2022).
+    driver. No Spark job at all, and each record's keys are computed once
+    for both pair kinds.
+  - **bins**: where the records and their embeddings are on the driver
+    already, the driver computes the keys, packs whole keys into bins by
+    estimated pair count (``key_costs``, ``pack_keys``: largest first,
+    each to the least-loaded bin), and ONE shuffle-free job
+    (``spark.range(P).mapInArrow``) runs the kernel once per bin, each
+    task reading only its own bin's rows and embedding rows from a
+    per-bin broadcast. One Arrow collect brings the tagged rows back and
+    the driver reduces them in Arrow.
+  - **keyed exchange** (``distributed_pairs``): vocabularies past
+    ``LinkConfig.broadcast_dense_limit``, whose records carry their
+    vectors and never reach the driver. One ``mapInArrow`` explodes the
+    records over their keys, ONE ``repartition`` by key puts every block
+    whole on one task, one ``mapInArrow`` runs the kernel per partition,
+    and one reduce keyed by surface finishes.
 
-Both placements return the same pairs, bit for bit, for any grouping of
+At dimension scale ``dimension_pairs`` picks in-process or bins from the
+estimated pair count (``LinkConfig.driver_pairs_limit``) and returns the
+same driver tables either way.
+
+Bins and the keyed exchange are the partition-by-signature, verify-locally
+scheme of distributed similarity joins (EDBT 2020), run as a few large
+Arrow batches rather than a DAG of small UDF boundaries (CIDR 2022); the
+bins plan the partitioning where the signatures already are.
+
+Every placement returns the same pairs, bit for bit, for any grouping of
 whole keys: mm duplicates score identically wherever they are produced,
 and each group's me winners are exact argmaxes of their candidate sets
 under a TOTAL order, so the argmax of the groups' argmaxes is the global
@@ -44,6 +59,7 @@ Per blocking key the kernel applies:
 
 from __future__ import annotations
 
+import heapq
 from typing import Iterator
 
 import numpy as np
@@ -64,6 +80,9 @@ _KERNEL_PA = pa.schema(
     + [(c, pa.float64()) for c in ("dense", "jw", "lev", "score")]
 )
 _TAGGED_PA = _KERNEL_PA.remove(3)
+# reduced pair rows as Arrow: the driver-side pairs of both dimension-scale
+# placements
+PAIRS_PA = _TAGGED_PA.remove(0)
 
 
 def record_keys(norm: str, _memo: dict | None = None) -> list[str]:
@@ -392,6 +411,41 @@ def reduce_pairs(
     return list(mm.values()), me
 
 
+def reduce_table(tagged: pa.Table, tau_ent: float) -> tuple[pa.Table, pa.Table]:
+    """``reduce_pairs`` over a ``_KERNEL_PA`` table, in Arrow: mm distinct
+    by (a, b) (duplicates are bit-identical rows), me sorted by surface
+    then the ``_me_rank`` order (score desc, b, norm_b) and cut to each
+    surface's first row, then ``tau_ent``. Returns (mm, me) ``PAIRS_PA``
+    tables; no row becomes a Python object."""
+    import pyarrow.compute as pc
+
+    kind = tagged.column("kind")
+    mm = (
+        tagged.filter(pc.equal(kind, MM))
+        .group_by(["a", "b"], use_threads=False)
+        .aggregate([(c, "min") for c in PAIRS_COLUMNS[2:]])
+    )
+    mm = pa.Table.from_arrays(
+        [mm.column(c if i < 2 else f"{c}_min") for i, c in enumerate(PAIRS_COLUMNS)],
+        schema=PAIRS_PA,
+    )
+    me = tagged.filter(pc.equal(kind, ME)).sort_by(
+        [("a", "ascending"), ("score", "descending"), ("b", "ascending"),
+         ("norm_b", "ascending")]
+    )
+    a = me.column("a").combine_chunks()
+    first = pa.concat_arrays(
+        [pa.array([True] if len(a) else [], pa.bool_()), pc.not_equal(a[1:], a[:-1])]
+    )
+    me = me.filter(pc.and_(first, pc.greater_equal(me.column("score"), tau_ent)))
+    return mm, me.select(PAIRS_COLUMNS)
+
+
+def pairs_table(rows: list[tuple]) -> pa.Table:
+    """Reduced pair rows (a, b, dense, jw, lev, score) as a ``PAIRS_PA`` table."""
+    return pa.Table.from_batches([_batch(rows, PAIRS_PA)])
+
+
 def local_pairs(
     surfs: list[tuple[str, str]],
     s_mat: np.ndarray,
@@ -426,6 +480,7 @@ def keyed_rows(
     one per (record, blocking key), surfaces first; ``erow`` indexes
     ``stack_rows(s_mat, a_mat)``."""
     memo: dict = {}
+    norm_keys: dict[str, list[str]] = {}
     keys: list[str] = []
     sides: list[int] = []
     rids: list[str] = []
@@ -434,12 +489,15 @@ def keyed_rows(
     for side, recs, offset in ((0, surfs, 0), (1, aliases, len(surfs))):
         for r, (rid, norm) in enumerate(recs):
             norm = norm or ""
-            for k in record_keys(norm, memo):
-                keys.append(k)
-                sides.append(side)
-                rids.append(rid)
-                norms.append(norm)
-                erow.append(offset + r)
+            ks = norm_keys.get(norm)
+            if ks is None:
+                ks = norm_keys[norm] = record_keys(norm, memo)
+            n = len(ks)
+            keys += ks
+            sides += [side] * n
+            rids += [rid] * n
+            norms += [norm] * n
+            erow += [offset + r] * n
     return keys, sides, rids, norms, np.asarray(erow, np.int64)
 
 
@@ -487,6 +545,132 @@ def local_me_pairs(
     )[1]
 
 
+def key_costs(
+    keys: list[str],
+    sides: list[int],
+    norms: list[str],
+    *,
+    max_block_size: int,
+    me_max_block_size: int | None,
+    neighborhood: int,
+) -> dict[str, int]:
+    """Estimated pairs the kernel scores per blocking key, over non-empty
+    norms: the mm all-pairs or sorted-neighbourhood count plus the me
+    product or insertion-window count. Keys that cannot yield a pair (fewer
+    than two surfaces and no surface/alias pair) are left out."""
+    counts: dict[str, list[int]] = {}  # key -> [surfaces, aliases, members]
+    for k, side, norm in zip(keys, sides, norms):
+        c = counts.setdefault(k, [0, 0, 0])
+        c[2] += 1
+        if norm:
+            c[side] += 1
+    w = neighborhood
+    costs: dict[str, int] = {}
+    for k, (s, a, members) in counts.items():
+        mm = s * (s - 1) // 2 if s <= max_block_size else s * w
+        exact_me = me_max_block_size is None or members <= me_max_block_size
+        cost = mm + s * (a if exact_me else min(2 * w, a))
+        if cost:
+            costs[k] = cost
+    return costs
+
+
+def pack_keys(costs: dict[str, int], n_bins: int) -> list[list[str]]:
+    """Whole keys in ``n_bins`` bins by longest-processing-time: largest
+    cost first (ties by key), each to the least-loaded bin (ties to the
+    lower bin). The bins' loads then differ by at most the largest single
+    key's cost; a hot key is never split."""
+    heap = [(0, b) for b in range(n_bins)]
+    bins: list[list[str]] = [[] for _ in range(n_bins)]
+    for k in sorted(costs, key=lambda k: (-costs[k], k)):
+        load, b = heapq.heappop(heap)
+        bins[b].append(k)
+        heapq.heappush(heap, (load + costs[k], b))
+    return bins
+
+
+def plan_bins(keys: list[str], costs: dict[str, int], n_bins: int) -> list[list[int]]:
+    """Kernel-row indices of each non-empty bin of ``pack_keys(costs,
+    n_bins)``; rows of keys without a cost (no possible pair) are in none."""
+    bin_of = {k: b for b, ks in enumerate(pack_keys(costs, n_bins)) for k in ks}
+    rows: list[list[int]] = [[] for _ in range(n_bins)]
+    for i, k in enumerate(keys):
+        b = bin_of.get(k)
+        if b is not None:
+            rows[b].append(i)
+    return [r for r in rows if r]
+
+
+def dimension_pairs(
+    spark,
+    surfs: list[tuple[str, str]],
+    s_mat: np.ndarray,
+    aliases: list[tuple[str, str]],
+    a_mat: np.ndarray | None,
+    *,
+    local_limit: int,
+    bins: int,
+    measure: str,
+    dense_weight: float,
+    tau_ent: float,
+    max_block_size: int,
+    me_max_block_size: int | None,
+    neighborhood: int,
+) -> tuple[pa.Table, pa.Table]:
+    """The pair stage at dimension scale, in-process or as bins.
+
+    Arguments as ``local_pairs``; the result is its reduced (mm, me) rows
+    as ``PAIRS_PA`` tables. The driver computes every record's keys and
+    each key's estimated pair count (``key_costs``). Up to ``local_limit``
+    estimated pairs the kernel runs in-process over one group. Above it,
+    whole keys are packed into at most ``bins`` bins and ONE shuffle-free
+    job of one task per bin runs the kernel; each bin's kernel rows and
+    the embedding rows they index ride one broadcast per bin, so a task
+    unpickles only its own bin. The tagged rows come back in one Arrow
+    collect and are reduced in Arrow (``reduce_table``)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    caps = dict(
+        max_block_size=max_block_size, me_max_block_size=me_max_block_size,
+        neighborhood=neighborhood,
+    )
+    keys, sides, rids, norms, erow = keyed_rows(surfs, aliases)
+    emb = stack_rows(s_mat, a_mat)
+    costs = key_costs(keys, sides, norms, **caps)
+    if sum(costs.values()) <= local_limit:
+        mm, me = reduce_pairs(*block_kernel(
+            keys, sides, rids, norms, erow, emb,
+            measure=measure, dense_weight=dense_weight, **caps,
+        ), tau_ent)
+        return pairs_table(mm), pairs_table(me)
+    payloads = []
+    for sel in plan_bins(keys, costs, bins):
+        used, local_erow = np.unique(erow[sel], return_inverse=True)
+        payloads.append((
+            [keys[i] for i in sel], [sides[i] for i in sel], [rids[i] for i in sel],
+            [norms[i] for i in sel], local_erow, emb[used],
+        ))
+    bcs = [spark.sparkContext.broadcast(p) for p in payloads]
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for b in rb.column("id").to_pylist():
+                yield _kernel_batch(*block_kernel(
+                    *bcs[b].value, measure=measure, dense_weight=dense_weight, **caps
+                ))
+
+    try:
+        tbl = (
+            spark.range(len(bcs), numPartitions=len(bcs))
+            .mapInArrow(kernel, from_arrow_schema(_KERNEL_PA))
+            .toArrow()
+        )
+    finally:
+        for bc in bcs:
+            bc.destroy()
+    return reduce_table(tbl, tau_ent)
+
+
 def distributed_pairs(
     records,
     *,
@@ -497,18 +681,15 @@ def distributed_pairs(
     me_max_block_size: int | None,
     neighborhood: int,
     partitions: int,
-    mat_bc=None,
 ):
     """Keyed-exchange placement: explode → repartition(key) → kernel →
     reduce keyed by surface.
 
-    ``records``: a DataFrame (side tinyint, rid string, norm string,
-    idx int) whose embeddings are rows ``idx`` of the broadcast matrix
-    ``mat_bc``, or (side, rid, norm, emb array<float>) carrying them
-    (``mat_bc=None``: vocabularies past the broadcast budget). Returns a
-    lazy DataFrame (kind tinyint, a, b, dense, jw, lev, score): kind
-    ``MM`` rows one per pair, kind ``ME`` rows each surface's top-1 alias
-    with score >= tau_ent."""
+    ``records``: a DataFrame (side tinyint, rid string, norm string, emb
+    array<float>) — records that carry their vectors (vocabularies past
+    the broadcast budget). Returns a lazy DataFrame (kind tinyint, a, b,
+    dense, jw, lev, score): kind ``MM`` rows one per pair, kind ``ME``
+    rows each surface's top-1 alias with score >= tau_ent."""
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import StringType, StructField, StructType
 
@@ -527,35 +708,23 @@ def distributed_pairs(
         if not batches:
             return
         tbl = pa.Table.from_batches(batches)
-        if mat_bc is not None:
-            emb = mat_bc.value
-            erow = tbl.column("idx").to_numpy().astype(np.int64)
-        else:
-            col = tbl.column("emb").combine_chunks()
-            emb = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
-            erow = np.arange(len(col))
-        mm_rows, me_rows = block_kernel(
+        col = tbl.column("emb").combine_chunks()
+        emb = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
+        yield _kernel_batch(*block_kernel(
             tbl.column("key").to_pylist(), tbl.column("side").to_pylist(),
             tbl.column("rid").to_pylist(), [s or "" for s in tbl.column("norm").to_pylist()],
-            erow, emb, measure=measure, dense_weight=dense_weight,
+            np.arange(len(col)), emb, measure=measure, dense_weight=dense_weight,
             max_block_size=max_block_size, me_max_block_size=me_max_block_size,
             neighborhood=neighborhood,
-        )
-        yield _batch(
-            [(MM, a, b, None, *v) for a, b, *v in mm_rows]
-            + [(ME, *r) for r in me_rows],
-            _KERNEL_PA,
-        )
+        ))
 
     def reduce(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         mm_rows: list[tuple] = []
         me_rows: list[tuple] = []
         for rb in batches:
-            for kind, a, b, norm_b, *v in zip(*(c.to_pylist() for c in rb.columns)):
-                if kind == MM:
-                    mm_rows.append((a, b, *v))
-                else:
-                    me_rows.append((a, b, norm_b, *v))
+            mm, me = _untag(rb)
+            mm_rows += mm
+            me_rows += me
         mm, me = reduce_pairs(mm_rows, me_rows, tau_ent)
         if mm or me:
             yield _batch([(MM, *r) for r in mm] + [(ME, *r) for r in me], _TAGGED_PA)
@@ -568,6 +737,26 @@ def distributed_pairs(
         .repartition(partitions, "a")
         .mapInArrow(reduce, from_arrow_schema(_TAGGED_PA))
     )
+
+
+def _kernel_batch(mm_rows: list[tuple], me_rows: list[tuple]) -> pa.RecordBatch:
+    """``block_kernel`` output as one kind-tagged batch (``_KERNEL_PA``)."""
+    return _batch(
+        [(MM, a, b, None, *v) for a, b, *v in mm_rows] + [(ME, *r) for r in me_rows],
+        _KERNEL_PA,
+    )
+
+
+def _untag(tagged) -> tuple[list[tuple], list[tuple]]:
+    """Kernel (mm, me) rows back out of a ``_KERNEL_PA`` batch or table."""
+    mm_rows: list[tuple] = []
+    me_rows: list[tuple] = []
+    for kind, a, b, norm_b, *v in zip(*(c.to_pylist() for c in tagged.columns)):
+        if kind == MM:
+            mm_rows.append((a, b, *v))
+        else:
+            me_rows.append((a, b, norm_b, *v))
+    return mm_rows, me_rows
 
 
 def _batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:

@@ -68,7 +68,7 @@ class EntityIndexStore:
         """Write the index rows + config to the next version dir, then
         advance the manifest. ``index_df`` must have (ord, id, emb); a
         ``norm`` column (the alias surface the row was encoded from —
-        what ``plans.pipeline.link`` keys its broadcast matrix by) is
+        what ``plans.pipeline.link`` blocks and scores the alias rows by) is
         preserved when present."""
         m = self._meta()
         version = (m["version"] + 1) if m else 1

@@ -25,11 +25,21 @@ the anchor. Pure-NIL duplicate mentions meet through mention↔mention
 edges instead.
 
 The pair stage (blocking → pair scoring → me top-1) is ONE block kernel
-(``operators.localpairs``) with two placements: in-process over one group
-up to ``LinkConfig.driver_pairs_limit`` records, else behind one keyed
-exchange — records explode over their blocking keys, one repartition by
-key, the kernel per partition, one reduce keyed by surface. Both give the
-same pairs bit for bit.
+(``operators.localpairs``) with three placements that give the same pairs
+bit for bit:
+  - in-process over one group, up to ``LinkConfig.driver_pairs_limit``
+    estimated pairs;
+  - bins, the rest of the dimension scale (up to ``broadcast_dense_limit``
+    surfaces): the driver packs whole blocking keys into
+    ``defaultParallelism`` bins and one shuffle-free job runs the kernel
+    once per bin, its rows coming back in one Arrow collect;
+  - keyed exchange, only for vocabularies past ``broadcast_dense_limit``:
+    records carrying their vectors explode over their blocking keys, one
+    repartition by key, the kernel per partition, one reduce keyed by
+    surface.
+The two dimension-scale placements differ only in where the kernel calls
+run; both return the pairs as driver-side Arrow tables and share
+everything downstream.
 
 Scale notes (100 TB):
   - the only wide rows (``html``) die immediately after text extraction
@@ -37,16 +47,18 @@ Scale notes (100 TB):
   - surfaces and aliases are dimension-sized: up to
     ``broadcast_dense_limit`` surfaces they reach the driver in ONE
     bounded, side-tagged collect (the action that also fills the mention
-    cache), are encoded there, and their embeddings ride one broadcast
-    matrix; beyond it the surfaces stay distributed and the pair-stage
-    records carry their vectors;
-  - the pair stage shuffles records once by blocking key, with the size
-    cap / sorted-neighbourhood skew guard applied per block;
-  - at dimension scale the edges reach the driver once (in-process pairs
-    never leave it; keyed-exchange edges come back in one Arrow collect)
-    and ONE driver union-find clusters them, up to CC's small-graph
-    threshold; past it, and beyond ``broadcast_dense_limit``, CC runs
-    its checkpointed star loop on the above-threshold edge set;
+    cache) and are encoded there; beyond it the surfaces stay distributed
+    and the pair-stage records carry their vectors;
+  - at dimension scale the pair stage shuffles nothing: the driver plans
+    the bins (whole keys, so the size cap / sorted-neighbourhood skew
+    guard still applies per block; a hot key is one task) and each task
+    reads its own bin's rows from a broadcast; beyond it the keyed
+    exchange shuffles records once by blocking key;
+  - at dimension scale the pair rows are on the driver (in-process, or
+    one Arrow collect of the bins' output), so ONE driver union-find
+    clusters their edges, up to CC's small-graph threshold; past it, and
+    beyond ``broadcast_dense_limit``, CC runs its checkpointed star loop
+    on the above-threshold edge set;
   - driver-side rows return to Spark as pandas over Arrow, never as a
     pickled Python list.
 """
@@ -64,11 +76,9 @@ from ..operators.cc import SMALL_GRAPH_THRESHOLD, _unionfind_local, connected_co
 from ..operators.localpairs import (
     ME,
     MM,
-    PAIRS_COLUMNS,
     PAIRS_SCHEMA,
+    dimension_pairs,
     distributed_pairs,
-    local_pairs,
-    stack_rows,
 )
 from ..operators.scoring import check_measure
 from ..sources.dictionary import explode_surfaces
@@ -124,14 +134,14 @@ class LinkConfig:
     # value) at Common-Crawl vocabulary scale, where one hot key carried
     # 2.6k surfaces x 2k aliases = 5M scored pairs (round-3 finding).
     me_max_block_size: int | None = None
-    # up to this many distinct surfaces, the pair stage reads embeddings
-    # from ONE broadcast matrix (north_star: the embedding index as a
-    # broadcast variable) and its records carry only a row index — ~0.25
-    # KB/row less shuffle + Arrow traffic. Above it the records carry
-    # their vectors through the exchange (scales to any vocabulary).
-    # 500k rows x 64 float32 = 128 MB. It also bounds the surfaces
-    # collect: at most this many + 1 surface rows reach the driver before
-    # link() falls back to the distributed plan.
+    # up to this many distinct surfaces, surfaces and aliases come to the
+    # driver in one bounded collect (at most this many + 1 surface rows
+    # before link() falls back to the distributed plan) and are encoded
+    # there, and the pair stage runs in-process or as driver-planned bins
+    # (see driver_pairs_limit): one task per bin, each reading only its
+    # bin's rows and embedding rows from a broadcast. 500k rows x 64
+    # float32 = 128 MB. Above it the records carry their vectors through
+    # the keyed exchange (scales to any vocabulary).
     broadcast_dense_limit: int = 500_000
     # S8 integration: directory of an EntityIndexStore holding the
     # pre-encoded alias index (ord, id, norm, emb). When set, link() LOADS
@@ -143,17 +153,21 @@ class LinkConfig:
     # first run (dimension-scale path). Like StageStore, one store dir
     # binds to one (dictionary, encoder) configuration.
     alias_store: str | None = None
-    # placement of the pair stage's block kernel: up to this many
-    # (surfaces + aliases) it runs in-process on the driver over ONE group
-    # — no Spark job, and its edges go straight to the driver union-find.
-    # Above it, the same kernel runs behind one keyed exchange (records
-    # exploded over blocking keys, repartitioned by key, one kernel call
-    # per partition, one reduce keyed by surface) — a handful of jobs
-    # whose fixed cost the in-process placement saves at dimension scale,
-    # and which spreads the work over every core at vocabulary scale (the
-    # in-process placement is single-threaded). Both placements give the
-    # same pairs bit for bit. 0 always uses the exchange.
-    driver_pairs_limit: int = 4_000
+    # placement of the pair stage's block kernel at dimension scale (up
+    # to broadcast_dense_limit surfaces), by the pairs the kernel will
+    # score (estimated per blocking key from its surface and alias counts
+    # and the block caps, operators.localpairs.key_costs): up to this many
+    # it runs in-process on the driver over ONE group — no Spark job.
+    # Above it, the driver packs whole blocking keys into
+    # defaultParallelism bins and ONE shuffle-free job runs the kernel
+    # once per bin — one job's fixed cost for spreading the work over
+    # every core (the in-process placement is single-threaded). On a
+    # 4-core host the two break even near 45k estimated pairs: er_scan
+    # (32k) links 0.2 s faster in-process, er_vocab (70k) 0.3 s faster as
+    # bins. Either way the reduced pairs end on the driver and go straight
+    # to the driver union-find. All placements give the same pairs bit
+    # for bit. 0 uses the bins whenever there is a pair to score.
+    driver_pairs_limit: int = 50_000
 
     def __post_init__(self) -> None:
         check_measure(self.measure)
@@ -389,11 +403,9 @@ def link(
     s_rows: list | None = None
     if use_bc:
         # At dimension scale the embeddings form one driver-side matrix
-        # (broadcast when the pair stage runs behind the exchange), so
-        # pair-stage records carry only a row index —
-        # the north_star's "embedding index as a broadcast variable".
-        # Above the limit (vocabularies past driver memory) the vectors
-        # stay distributed and ride the records instead.
+        # that the pair stage reads in-process or ships bin by bin. Above
+        # the limit (vocabularies past driver memory) the vectors stay
+        # distributed and ride the records instead.
         #
         # alias dimension table: the committed store's rows when loaded
         # (S8 reuse — no re-encode; the SAME rows the pair stage blocks
@@ -452,12 +464,7 @@ def link(
                     "measure": cfg.measure,
                 },
             )
-    use_local = (
-        cfg.driver_pairs_limit > 0
-        and use_bc
-        and n_surf + len(apdf) <= cfg.driver_pairs_limit
-    )
-    mark(f"keys+embs materialize (local_pairs={use_local})", _t0)
+    mark("keys+embs materialize", _t0)
 
     kernel_args = dict(
         measure=cfg.measure,
@@ -467,54 +474,40 @@ def link(
         me_max_block_size=cfg.me_max_block_size,
         neighborhood=cfg.neighborhood,
     )
-    # The pair stage (operators.localpairs): ONE block kernel, placed
-    # in-process below driver_pairs_limit ("local": reduced (mm, me) rows
-    # that never leave the driver) or behind one keyed exchange ("df": a
-    # frame of kind-tagged rows). Built once, on first use by either pairs
-    # frame; aliases are scored per (id, norm) — one entity may carry
-    # several alias norms.
+    # The pair stage (operators.localpairs): ONE block kernel. At
+    # dimension scale it runs in-process up to driver_pairs_limit
+    # estimated pairs, else as driver-planned bins in one job; both give
+    # reduced (mm, me) pairs on the driver as Arrow tables ("tables").
+    # Beyond broadcast_dense_limit it runs behind the keyed exchange
+    # ("df": a frame of kind-tagged rows). Built once, on first use by
+    # either pairs frame; aliases are scored per (id, norm) — one entity
+    # may carry several alias norms.
     _pairs: dict = {}
 
     def pair_stage() -> dict:
         if _pairs:
             return _pairs
-        if use_local:
-            _pairs["local"] = local_pairs(s_rows, s_mat, a_rows, a_mat, **kernel_args)
-            return _pairs
-        mat_bc = None
         if use_bc:
-            # records carry a row index into one broadcast matrix
-            import numpy as np
-            import pandas as pd
-
-            recs = pd.concat(
-                [spdf[["rid", "norm"]].assign(side=0), apdf[["rid", "norm"]].assign(side=1)],
-                ignore_index=True,
+            _pairs["tables"] = dimension_pairs(
+                spark, s_rows, s_mat, a_rows, a_mat,
+                local_limit=cfg.driver_pairs_limit,
+                bins=spark.sparkContext.defaultParallelism, **kernel_args,
             )
-            recs["idx"] = np.arange(len(recs), dtype=np.int32)
-            records = spark.createDataFrame(
-                recs[["side", "rid", "norm", "idx"]],
-                "side tinyint, rid string, norm string, idx int",
-            )
-            mat_bc = spark.sparkContext.broadcast(stack_rows(s_mat, a_mat))
-        else:
-            # beyond-broadcast vocabulary: records carry their vectors;
-            # the alias side is the committed store's rows when loaded
-            alias_embs = (
-                store_idx.select(F.col("id").alias("rid"), "norm", "emb")
-                if store_idx is not None
-                else _with_emb(alias_records.coalesce(p_surf), enc=cfg.encoder)
-            )
-            records = s_embs.select(
-                F.lit(0).cast("tinyint").alias("side"), "rid", "norm", "emb"
-            ).unionByName(
-                alias_embs.select(F.lit(1).cast("tinyint").alias("side"), "rid", "norm", "emb")
-            )
+            return _pairs
+        # beyond-broadcast vocabulary: records carry their vectors; the
+        # alias side is the committed store's rows when loaded
+        alias_embs = (
+            store_idx.select(F.col("id").alias("rid"), "norm", "emb")
+            if store_idx is not None
+            else _with_emb(alias_records.coalesce(p_surf), enc=cfg.encoder)
+        )
+        records = s_embs.select(
+            F.lit(0).cast("tinyint").alias("side"), "rid", "norm", "emb"
+        ).unionByName(
+            alias_embs.select(F.lit(1).cast("tinyint").alias("side"), "rid", "norm", "emb")
+        )
         tagged = distributed_pairs(
-            records,
-            partitions=spark.sparkContext.defaultParallelism,
-            mat_bc=mat_bc,
-            **kernel_args,
+            records, partitions=spark.sparkContext.defaultParallelism, **kernel_args
         )
         # a store (or verbose mode) materializes pairs_mm and pairs_me one
         # at a time: cache the tagged rows so the stage runs once. Otherwise
@@ -524,12 +517,8 @@ def link(
 
     def pair_frame(kind: int) -> DataFrame:
         st = pair_stage()
-        if "local" in st:
-            import pandas as pd
-
-            return spark.createDataFrame(
-                pd.DataFrame(st["local"][kind], columns=PAIRS_COLUMNS), PAIRS_SCHEMA
-            )
+        if "tables" in st:
+            return spark.createDataFrame(st["tables"][kind].to_pandas(), PAIRS_SCHEMA)
         return st["df"].filter(F.col("kind") == kind).drop("kind")
 
     pairs_mm = stage("pairs_mm", lambda: pair_frame(MM))
@@ -576,23 +565,21 @@ def link(
     local_assign: list[tuple[str, str]] | None = None
     edges_persisted = False
     if store is None and use_bc:
-        # dimension scale: the surface rows are on the driver already, so
-        # the edges come here too and one driver union-find (the contract
-        # of connected_components' small-graph path: self-loops dropped,
+        # dimension scale: the surface and pair rows are on the driver
+        # already, so one driver union-find (the contract of
+        # connected_components' small-graph path: self-loops dropped,
         # min-id cluster ids) replaces the edges persist + count and CC's
-        # re-canonicalise + collect. In-process pairs never left the
-        # driver; keyed-exchange edges arrive in one Arrow collect,
-        # bounded by CC's small-graph threshold — past it the star loop
-        # below runs instead.
+        # re-canonicalise + collect, up to CC's small-graph threshold —
+        # past it the star loop below runs instead.
         _t0 = _time.monotonic()
-        if "local" in _pairs:
-            mm_rows, me_rows = _pairs["local"]
-            edge_rows = [(r[0], r[1]) for r in mm_rows if r[5] >= cfg.tau_mm] + [
-                (r[0], r[1]) for r in me_rows
-            ]
-        else:
-            tbl = edges.limit(SMALL_GRAPH_THRESHOLD + 1).toArrow()
-            edge_rows = list(zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()))
+        import pyarrow.compute as pc
+
+        mm_t, me_t = _pairs["tables"]
+        edge_rows = [
+            pair
+            for t in (mm_t.filter(pc.greater_equal(mm_t["score"], cfg.tau_mm)), me_t)
+            for pair in zip(t["a"].to_pylist(), t["b"].to_pylist())
+        ]
         if len(edge_rows) <= SMALL_GRAPH_THRESHOLD:
             local_assign = _unionfind_local([(a, b) for a, b in edge_rows if a != b])
         mark(f"edges local (n={len(edge_rows)})", _t0)

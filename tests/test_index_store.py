@@ -167,10 +167,10 @@ def test_alias_store_wins_in_every_scale_regime(spark, corpus, tmp_path):
         )
         return {(r["a"], r["b"]) for r in out["pairs_me"].collect()}
 
-    local = anchors()                                        # driver-local
-    bc = anchors(driver_pairs_limit=0)                       # bc-dense distributed
-    joined = anchors(driver_pairs_limit=0, broadcast_dense_limit=0)  # join path
-    assert local == bc == joined
+    local = anchors()                                        # in-process
+    bins = anchors(driver_pairs_limit=0)                     # driver-planned bins
+    keyed = anchors(driver_pairs_limit=0, broadcast_dense_limit=0)  # keyed exchange
+    assert local == bins == keyed
     # store wins: every anchor targets a store entity, none a dropped one
     assert local, "half dictionary should still anchor some surfaces"
     for _a, b in local:

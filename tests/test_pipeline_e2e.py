@@ -16,6 +16,11 @@ from mix_blink_spark.plans.pipeline import LinkConfig, link
 from mix_blink_spark.plans.resume import StageStore
 
 
+# a driver_pairs_limit above any test corpus's estimated pair count: the
+# pair stage runs in-process
+IN_PROCESS = 10**9
+
+
 @pytest.fixture(scope="module")
 def e2e(spark):
     pages, ents, golds, labeled = corpus_dfs(spark, seed=7, n_pages=1500, n_entities=80)
@@ -111,18 +116,19 @@ def test_resume_skips_completed_stages(spark, e2e, tmp_path):
 
 
 def test_local_pairs_parity_with_distributed(spark, e2e):
-    """The pair stage's two placements (operators.localpairs: the block
-    kernel in-process at dimension scale, or behind the keyed exchange)
-    must produce EXACTLY the same pairs — same (a, b) sets, bit-identical
-    scores — and the same final clusters. max_block_size/me cap are
-    forced low so BOTH the all-pairs and the sorted-neighborhood/
-    insertion-window branches execute in each placement."""
+    """The pair stage's three placements (operators.localpairs: the block
+    kernel in-process, as driver-planned bins in one Spark job, or behind
+    the keyed exchange past broadcast_dense_limit) must produce EXACTLY
+    the same pairs — same (a, b) sets, bit-identical scores — and the same
+    final clusters. max_block_size/me cap are forced low so BOTH the
+    all-pairs and the sorted-neighborhood/insertion-window branches
+    execute in each placement."""
     pages, ents, golds, labeled = e2e
     spans = golds.select("url", "mention_id", "start", "end")
 
-    def run(limit):
+    def run(limit, dense_limit=500_000):
         cfg = LinkConfig(max_block_size=12, me_max_block_size=30, neighborhood=4,
-                         driver_pairs_limit=limit)
+                         driver_pairs_limit=limit, broadcast_dense_limit=dense_limit)
         out = link(spark, pages, spans, ents, cfg)
         mm = {(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
               for r in out["pairs_mm"].collect()}
@@ -131,16 +137,16 @@ def test_local_pairs_parity_with_distributed(spark, e2e):
         cl = {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
         return mm, me, cl
 
-    mm_l, me_l, cl_l = run(50_000)   # in-process (dimension-scale corpus)
-    mm_d, me_d, cl_d = run(0)        # keyed exchange forced
-
-    assert set(mm_l) == set(mm_d)
-    assert set(me_l) == set(me_d)
-    for k in mm_l:
-        assert mm_l[k] == mm_d[k], (k, mm_l[k], mm_d[k])
-    for k in me_l:
-        assert me_l[k] == me_d[k], (k, me_l[k], me_d[k])
-    assert cl_l == cl_d
+    mm_l, me_l, cl_l = run(IN_PROCESS)   # in-process (dimension-scale corpus)
+    for placed in (run(0), run(0, dense_limit=0)):  # bins, keyed exchange
+        mm_d, me_d, cl_d = placed
+        assert set(mm_l) == set(mm_d)
+        assert set(me_l) == set(me_d)
+        for k in mm_l:
+            assert mm_l[k] == mm_d[k], (k, mm_l[k], mm_d[k])
+        for k in me_l:
+            assert me_l[k] == me_d[k], (k, me_l[k], me_d[k])
+        assert cl_l == cl_d
 
 
 def test_empty_norm_mentions_are_singletons(spark):
@@ -172,7 +178,7 @@ def test_empty_norm_mentions_are_singletons(spark):
         [("e1", "Acme Corp", ["Acme Corporation"], "maker of anvils")],
         "id string, name string, aliases array<string>, description string",
     )
-    for limit in (50_000, 0):  # driver-local regime, then distributed
+    for limit in (IN_PROCESS, 0):  # in-process, then bins
         out = link(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=limit))
         cl = {r["member"]: r["cluster_id"] for r in out["clusters"].collect()}
         assert cl["m_punct"] == "m_punct", (limit, cl)
@@ -210,7 +216,7 @@ def test_rowemb_parity_beyond_broadcast(spark):
     vocabulary regime, where records carry their vectors through the keyed
     exchange. The bounded surfaces collect must give up at limit + 1 rows
     and fall back to that regime: its me pairs must equal the
-    broadcast-matrix regime's, bit for bit, and its clusters the
+    dimension-scale bins placement's, bit for bit, and its clusters the
     in-process placement's."""
     from mix_blink_spark.fixtures import corpus_dfs
 
@@ -225,7 +231,7 @@ def test_rowemb_parity_beyond_broadcast(spark):
         return me, {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
 
     bc_me, _ = run(500_000)
-    _, local_cl = run(500_000, pairs_limit=50_000)
+    _, local_cl = run(500_000, pairs_limit=IN_PROCESS)
     for dense_limit in (0, 5):
         me, cl = run(dense_limit)
         assert me == bc_me, dense_limit
@@ -250,17 +256,19 @@ def _link_jobs(spark, pages, spans, ents, cfg):
     return out, len(jobs)
 
 
-# jobs one keyed-exchange link() submits on the corpus below (local[4]):
-# 12 with one collect per side; 22 with the surfaces count, the edges
-# persist + count and CC's collect; 38 with the DataFrame blocking +
-# scoring DAG before the block kernel
-LINK_JOB_CEILING = 13
+# jobs one link() with the pair stage in Spark submits on the corpus
+# below (local[4]): 10 with the bins' one shuffle-free job (8 after a
+# session's first link()); 12 with the keyed exchange's three stages; 22
+# with the surfaces count, the edges persist + count and CC's collect; 38
+# with the DataFrame blocking + scoring DAG before the block kernel
+LINK_JOB_CEILING = 11
 
 
 def test_distributed_link_job_count(spark):
-    """A ceiling on the Spark jobs one link() runs with the pair stage on
-    the keyed exchange (driver_pairs_limit=0) — so a change cannot quietly
-    bring back a many-job pair DAG or a dimension-scale tail."""
+    """A ceiling on the Spark jobs one link() runs with the pair stage in
+    Spark (driver_pairs_limit=0: the bins at this dimension-scale corpus)
+    — so a change cannot quietly bring back a many-job pair DAG or a
+    dimension-scale tail."""
     from mix_blink_spark.fixtures import corpus_dfs
 
     pages, ents, golds, _ = corpus_dfs(spark, seed=29, n_pages=300, n_entities=30)
@@ -270,6 +278,26 @@ def test_distributed_link_job_count(spark):
     out, jobs = _link_jobs(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=0))
     assert out["clusters"].count() > 0
     assert 0 < jobs <= LINK_JOB_CEILING, jobs
+
+
+# jobs the same link() submits with the pair stage behind the keyed
+# exchange (broadcast_dense_limit=0: the vocabulary-scale plan) on the
+# corpus below (local[4]): 23 as a session's first link(), 20 after it
+KEYED_LINK_JOB_CEILING = 24
+
+
+def test_keyed_exchange_link_job_count(spark):
+    """The job ceiling of the vocabulary-scale plan: surfaces persisted
+    and counted, records carrying their vectors through the keyed
+    exchange, CC on the edge set."""
+    pages, ents, golds, _ = corpus_dfs(spark, seed=29, n_pages=300, n_entities=30)
+    for df in (pages, ents, golds):
+        df.cache().count()
+    spans = golds.select("url", "mention_id", "start", "end")
+    cfg = LinkConfig(driver_pairs_limit=0, broadcast_dense_limit=0)
+    out, jobs = _link_jobs(spark, pages, spans, ents, cfg)
+    assert out["clusters"].count() > 0
+    assert 0 < jobs <= KEYED_LINK_JOB_CEILING, jobs
 
 
 # jobs one in-process link() over a parquet-path pages input submits on
@@ -294,19 +322,28 @@ def test_parquet_scan_link_job_count(spark, tmp_path):
     assert 0 < jobs <= SCAN_LINK_JOB_CEILING, jobs
 
 
+# LinkConfig fields that put the pair stage of the corpus below in each
+# placement: in-process, bins, keyed exchange
+PLACEMENTS = {
+    "in-process": dict(driver_pairs_limit=IN_PROCESS),
+    "bins": dict(driver_pairs_limit=0),
+    "keyed exchange": dict(driver_pairs_limit=0, broadcast_dense_limit=0),
+}
+
+
 @pytest.fixture(scope="module")
 def unshuffled(spark):
     """A corpus and its clusters in each pair-stage placement, at the
     session's own page order and shuffle partitions."""
     pages, ents, golds, _ = corpus_dfs(spark, seed=37, n_pages=200, n_entities=20)
     spans = golds.select("url", "mention_id", "start", "end")
-    want = {limit: _clusters(spark, pages, spans, ents, limit) for limit in (0, 50_000)}
-    assert want[0] == want[50_000]
+    want = {name: _clusters(spark, pages, spans, ents, kw) for name, kw in PLACEMENTS.items()}
+    assert want["in-process"] == want["bins"] == want["keyed exchange"]
     return pages, spans, ents, want
 
 
-def _clusters(spark, pages, spans, ents, driver_pairs_limit):
-    out = link(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=driver_pairs_limit))
+def _clusters(spark, pages, spans, ents, placement: dict):
+    out = link(spark, pages, spans, ents, LinkConfig(**placement))
     return {(r["member"], r["cluster_id"]) for r in out["clusters"].collect()}
 
 
@@ -317,13 +354,60 @@ def test_clusters_invariant_to_page_order_and_partitions(
 ):
     """Metamorphic: shuffling the page order and changing
     spark.sql.shuffle.partitions leaves link()'s clusters unchanged, in
-    both pair-stage placements."""
+    every pair-stage placement."""
     pages, spans, ents, want = unshuffled
     shuffled = pages.orderBy(F.rand(order_seed)).repartition(partitions)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
-        for limit in (0, 50_000):
-            assert _clusters(spark, shuffled, spans, ents, limit) == want[limit], limit
+        for name, kw in PLACEMENTS.items():
+            assert _clusters(spark, shuffled, spans, ents, kw) == want[name], name
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+_SMALL_HEAP_LINK = """
+import json
+from mix_blink_spark.fixtures import corpus_dfs
+from mix_blink_spark.plans.pipeline import LinkConfig, link
+from mix_blink_spark.session import get_spark
+
+spark = get_spark(app_name="mbs-small-heap", master="local[2]",
+                  extra_conf={"spark.driver.memory": "2g"})
+pages, ents, golds, _ = corpus_dfs(spark, seed=41, n_pages=600, n_entities=40)
+spans = golds.select("url", "mention_id", "start", "end")
+runs = {}
+for limit in (0, LinkConfig().driver_pairs_limit):
+    out = link(spark, pages, spans, ents, LinkConfig(driver_pairs_limit=limit))
+    runs[limit] = [[r["member"], r["cluster_id"]] for r in out["clusters"].collect()]
+print(json.dumps({
+    "max_heap": spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory(),
+    "mentions": [r["mention_id"] for r in golds.select("mention_id").collect()],
+    "runs": list(runs.values()),
+}))
+spark.stop()
+"""
+
+
+def test_link_fits_a_small_driver_heap():
+    """The pipeline fits a small host: in a fresh session with a 2 GiB
+    driver heap on two cores, link() runs with the pair stage as bins
+    (driver_pairs_limit=0) and with the default placement. Every mention
+    is in exactly one cluster, and both runs give the same clusters."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SMALL_HEAP_LINK], cwd=root, capture_output=True,
+        text=True, timeout=600, env={**os.environ, "PYTHONPATH": root},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert res["max_heap"] <= 2 * 2**30, res["max_heap"]
+    mentions = sorted(res["mentions"])
+    for rows in res["runs"]:
+        assert sorted(m for m, _ in rows) == mentions
+    bins_run, default_run = ({tuple(r) for r in rows} for rows in res["runs"])
+    assert bins_run == default_run

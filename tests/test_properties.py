@@ -177,18 +177,19 @@ _norms = st.lists(st.sampled_from(_TOKENS), min_size=1, max_size=3).map(" ".join
 def test_block_kernel_is_invariant_to_key_grouping(
     surfaces, aliases, max_block_size, me_max_block_size, neighborhood, measure
 ):
-    """The kernel over ANY grouping of whole blocking keys — here hash
-    buckets for P in {1, 2, 3, 7}, as the keyed exchange places them —
-    followed by the reduce equals the single-group (in-process) call pair
-    for pair and bit for bit. Low caps make the sorted-neighbourhood and
-    insertion-window branches run."""
+    """The kernel over ANY grouping of whole blocking keys — hash buckets
+    for P in {1, 2, 3, 7}, as the keyed exchange places them, and the
+    production bin packer's bins for the same P — followed by the reduce
+    equals the single-group (in-process) call pair for pair and bit for
+    bit. Low caps make the sorted-neighbourhood and insertion-window
+    branches run."""
     import zlib
 
     import numpy as np
 
     from mix_blink_spark.functions.embed import encode_matrix
     from mix_blink_spark.operators.localpairs import (
-        block_kernel, keyed_rows, local_pairs, reduce_pairs, stack_rows,
+        key_costs, keyed_rows, local_pairs, plan_bins, stack_rows,
     )
 
     surfs = [(f"NORM::{i:03d}", n) for i, n in enumerate(surfaces)]
@@ -203,17 +204,140 @@ def test_block_kernel_is_invariant_to_key_grouping(
 
     keys, sides, rids, norms, erow = keyed_rows(surfs, als)
     emb = stack_rows(s_mat, a_mat)
+    caps = {k: kw[k] for k in ("max_block_size", "me_max_block_size", "neighborhood")}
+    costs = key_costs(keys, sides, norms, **caps)
     for p in (1, 2, 3, 7):
-        mm_rows, me_rows = [], []
-        for bucket in range(p):
-            sel = [i for i, k in enumerate(keys) if zlib.crc32(k.encode()) % p == bucket]
-            mm, me = block_kernel(
-                [keys[i] for i in sel], [sides[i] for i in sel], [rids[i] for i in sel],
-                [norms[i] for i in sel], erow[sel], emb, **kw,
-            )
-            mm_rows += mm
-            me_rows += me
-        grouped = reduce_pairs(mm_rows, me_rows, 0.6)
-        for got, want in zip(grouped, single):
-            assert len(got) == len(want)
-            assert {r[:2]: r[2:] for r in got} == {r[:2]: r[2:] for r in want}, p
+        hashed = [
+            [i for i, k in enumerate(keys) if zlib.crc32(k.encode()) % p == bucket]
+            for bucket in range(p)
+        ]
+        for groups in (hashed, plan_bins(keys, costs, p)):
+            grouped = _grouped_pairs(groups, keys, sides, rids, norms, erow, emb, kw)
+            _assert_same_pairs(grouped, single, p)
+
+
+def _grouped_pairs(groups, keys, sides, rids, norms, erow, emb, kw, tau_ent=0.6):
+    """block_kernel once per group of kernel-row indices, then the reduce."""
+    from mix_blink_spark.operators.localpairs import block_kernel, reduce_pairs
+
+    mm_rows, me_rows = [], []
+    for sel in groups:
+        mm, me = block_kernel(
+            [keys[i] for i in sel], [sides[i] for i in sel], [rids[i] for i in sel],
+            [norms[i] for i in sel], erow[sel], emb, **kw,
+        )
+        mm_rows += mm
+        me_rows += me
+    return reduce_pairs(mm_rows, me_rows, tau_ent)
+
+
+def _assert_same_pairs(got_pairs, want_pairs, label):
+    for got, want in zip(got_pairs, want_pairs):
+        assert len(got) == len(want), label
+        assert {r[:2]: r[2:] for r in got} == {r[:2]: r[2:] for r in want}, label
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    hot=st.integers(30, 90),
+    small=st.lists(st.integers(1, 6), min_size=1, max_size=30),
+    n_bins=st.integers(1, 8),
+)
+def test_bin_packing_of_a_hot_key(hot, small, n_bins):
+    """Skew: one hot blocking key (``hot`` surfaces and aliases sharing a
+    first token) plus many small keys. The production bins (a) give the
+    single-group pairs bit for bit, the hot key whole in one bin, and (b)
+    have estimated loads that differ by at most the largest single key's
+    cost — the longest-processing-time bound."""
+    import numpy as np
+
+    from mix_blink_spark.functions.embed import encode_matrix
+    from mix_blink_spark.operators.localpairs import (
+        key_costs, keyed_rows, local_pairs, pack_keys, plan_bins, stack_rows,
+    )
+
+    surfaces = [f"hot s{i}" for i in range(hot)]
+    surfaces += [f"cold{j} t{i}" for j, n in enumerate(small) for i in range(n)]
+    surfs = [(f"NORM::{i:04d}", n) for i, n in enumerate(surfaces)]
+    als = [(f"ENT::H{i}", f"hot s{i * 3}") for i in range(hot // 3)]
+    als += [(f"ENT::C{j}", f"cold{j} t0") for j in range(len(small))]
+    s_mat = encode_matrix(surfaces).astype(np.float32)
+    a_mat = encode_matrix([n for _, n in als]).astype(np.float32)
+    kw = dict(measure="cos", dense_weight=0.5, max_block_size=40,
+              me_max_block_size=None, neighborhood=4)
+    single = local_pairs(surfs, s_mat, als, a_mat, tau_ent=0.6, **kw)
+
+    keys, sides, rids, norms, erow = keyed_rows(surfs, als)
+    caps = {k: kw[k] for k in ("max_block_size", "me_max_block_size", "neighborhood")}
+    costs = key_costs(keys, sides, norms, **caps)
+    groups = plan_bins(keys, costs, n_bins)
+    grouped = _grouped_pairs(groups, keys, sides, rids, norms, erow, stack_rows(s_mat, a_mat), kw)
+    _assert_same_pairs(grouped, single, n_bins)
+    assert sum(any(keys[i] == "tk:hot" for i in sel) for sel in groups) == 1
+
+    loads = [sum(costs[k] for k in b) for b in pack_keys(costs, n_bins)]
+    assert sorted(k for b in pack_keys(costs, n_bins) for k in b) == sorted(costs)
+    assert max(loads) - min(loads) <= max(costs.values())
+
+
+_ids = st.sampled_from(["a", "b", "ab", "a\x00b", "é", "Z", "東"])
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    mm_pairs=st.lists(st.tuples(_ids, _ids), max_size=25),
+    me_rows=st.lists(
+        st.tuples(_ids, _ids, _ids, st.sampled_from([0.3, 0.6, 0.61, 0.9])), max_size=25
+    ),
+    n_batches=st.integers(1, 4),
+)
+def test_reduce_table_equals_reduce_pairs(mm_pairs, me_rows, n_batches):
+    """The bins' Arrow reduce gives ``reduce_pairs``' rows for kernel
+    output split over any number of batches: mm duplicates (bit-identical
+    rows, as the kernel scores a pair alike under every key) collapse,
+    and each surface keeps its top me candidate by (score desc, b, norm_b)
+    — with embedded NULs and non-ASCII ids ordered as Python orders them —
+    then ``tau_ent``."""
+    import pyarrow as pa
+
+    from mix_blink_spark.operators.localpairs import _kernel_batch, reduce_pairs, reduce_table
+
+    def scores(*key):
+        h = hash(key) % 1000
+        return h / 1000, h / 2000, h / 3000
+
+    mm = [(a, b, *scores(a, b), scores(a, b)[0] / 2) for a, b in mm_pairs]
+    me = [(a, b, nb, *scores(a, b, nb), sc) for a, b, nb, sc in me_rows]
+    want = reduce_pairs(mm, me, 0.6)
+    batches = [
+        _kernel_batch(mm[i::n_batches], me[i::n_batches]) for i in range(n_batches)
+    ]
+    got = reduce_table(pa.Table.from_batches(batches), 0.6)
+    for g, w in zip(got, want):
+        assert sorted(zip(*g.to_pydict().values())) == sorted(w)
+
+
+_encode_texts = st.one_of(
+    st.just(""),
+    st.sampled_from(["acme", "ACME corp", "café", "Zürich AG", "東京", "a", "ab"]),
+    st.text(alphabet=st.characters(min_codepoint=1, max_codepoint=0x2FFF), max_size=24),
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_encode_texts, max_size=20).flatmap(
+    lambda xs: st.permutations(xs + xs[: len(xs) // 2])
+))
+def test_encode_matrix_equals_stacked_encode_one(xs):
+    """The batch encoder (which memoizes each gram's bucket and sign per
+    call) gives exactly the per-string encoder's float32 rows, for empty,
+    non-ASCII and repeated strings."""
+    import numpy as np
+
+    from mix_blink_spark.functions.embed import DIM, encode_matrix
+
+    want = np.stack([encode_one(x) for x in xs]) if xs else np.zeros((0, DIM), np.float32)
+    got = encode_matrix(xs)
+    assert got.dtype == want.dtype == np.float32
+    assert got.shape == want.shape
+    assert got.tobytes() == want.tobytes()

@@ -95,30 +95,39 @@ def test_hard_negatives_never_contain_golds(spark, small_index):
     assert ranks == list(range(1, len(ranks) + 1))
 
 
-def _me_both_placements(spark, surfs, aliases, tau_ent, partitions=(1, 4)):
-    """me winners of the pair-stage block kernel, in-process and through
-    the keyed exchange at each partition count: (local, [distributed])."""
+def _me_both_placements(spark, surfs, aliases, tau_ent, bins=(1, 4)):
+    """me winners of the pair-stage block kernel in-process, then in each
+    Spark placement: the driver-planned bins at each bin count and the
+    keyed exchange on row embeddings. Returns (local, [spark placements])."""
     from mix_blink_spark.operators.localpairs import (
-        ME, distributed_pairs, local_pairs, stack_rows,
+        ME, dimension_pairs, distributed_pairs, local_pairs,
     )
 
     s_mat = encode_matrix([n for _, n in surfs]).astype(np.float32)
     a_mat = encode_matrix([n for _, n in aliases]).astype(np.float32)
     kw = dict(measure="cos", dense_weight=0.5, tau_ent=tau_ent, max_block_size=200,
               me_max_block_size=None, neighborhood=8)
-    local = local_pairs(surfs, s_mat, aliases, a_mat, mm=False, **kw)[1]
+
+    def as_dict(rows):
+        return {(r[0], r[1]): tuple(r[2:]) for r in rows}
+
+    local = as_dict(local_pairs(surfs, s_mat, aliases, a_mat, mm=False, **kw)[1])
+    placed = [
+        as_dict(zip(*dimension_pairs(spark, surfs, s_mat, aliases, a_mat, local_limit=0,
+                                     bins=p, **kw)[1].to_pydict().values()))
+        for p in bins
+    ]
     records = spark.createDataFrame(
-        [(0, r, n, i) for i, (r, n) in enumerate(surfs)]
-        + [(1, r, n, len(surfs) + i) for i, (r, n) in enumerate(aliases)],
-        "side tinyint, rid string, norm string, idx int",
+        [(0, r, n, [float(x) for x in s_mat[i]]) for i, (r, n) in enumerate(surfs)]
+        + [(1, r, n, [float(x) for x in a_mat[i]]) for i, (r, n) in enumerate(aliases)],
+        "side tinyint, rid string, norm string, emb array<float>",
     )
-    bc = spark.sparkContext.broadcast(stack_rows(s_mat, a_mat))
-    dist = []
-    for p in partitions:
-        out = distributed_pairs(records, partitions=p, mat_bc=bc, **kw)
-        dist.append({(r["a"], r["b"]): (r["dense"], r["jw"], r["lev"], r["score"])
-                     for r in out.filter(F.col("kind") == ME).collect()})
-    return {(r[0], r[1]): r[2:] for r in local}, dist
+    out = distributed_pairs(records, partitions=4, **kw)
+    placed.append(as_dict(
+        (r["a"], r["b"], r["dense"], r["jw"], r["lev"], r["score"])
+        for r in out.filter(F.col("kind") == ME).collect()
+    ))
+    return local, placed
 
 
 def test_block_kernel_keeps_nul_colliding_aliases_distinct(spark):
@@ -177,7 +186,7 @@ def test_block_kernel_keeps_nul_colliding_aliases_distinct(spark):
 def test_block_kernel_large_me_input(spark):
     """A large me input — 400 surfaces x 50 aliases all sharing one
     blocking key, ~20k candidates in one block — gives the same winners
-    in-process and through the keyed exchange at 1 and 4 partitions."""
+    in-process, as bins at 1 and 4 bins, and through the keyed exchange."""
     n_surf, n_ent = 400, 50
     surfs = [(f"NORM::s{i}", f"surf number {i}") for i in range(n_surf)]
     ents = [(f"ENT::E{j}", f"surf number {j * 8 % n_surf}") for j in range(n_ent)]

@@ -3,9 +3,16 @@ pre-explode size() column (the _maxpos window is a second WindowExec pass
 over every token row; size(tokens) is known before the explode).
 
 Usage: python tools/ab_fingerprint.py [n_docs_multiplier] [reps]
+           [--docs DOCS_PARQUET] [--scratch DIR]
+
+``--docs`` defaults to ``documents.parquet`` under ``$SPARK_GRAFT_SF_DIR``
+(the TPC-H-style test-data directory bench.py reads); ``--scratch`` is
+where the replicated input is written (overwritten), /tmp/ab-fp-docs by
+default.
 """
 from __future__ import annotations
 
+import argparse
 import os
 import statistics
 import sys
@@ -42,28 +49,41 @@ def fingerprint_nowin(docs: DataFrame, id_col="doc_id", text_col="text", w=5) ->
     return shingled.groupBy("id").agg(F.min(F.md5("sh")).alias("fingerprint"))
 
 
+def _args(argv=None) -> argparse.Namespace:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("mult", type=int, nargs="?", default=10, help="n_docs multiplier")
+    p.add_argument("reps", type=int, nargs="?", default=4)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    p.add_argument(
+        "--docs", default=sf_dir and os.path.join(sf_dir, "documents.parquet"),
+        required=sf_dir is None, help="input documents parquet",
+    )
+    p.add_argument("--scratch", default="/tmp/ab-fp-docs", help="replicated input dir")
+    return p.parse_args(argv)
+
+
 def main():
-    mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
+    args = _args()
+    mult, reps = args.mult, args.reps
     from mix_blink_spark.functions.textstats import fingerprint
 
     spark = get_spark(app_name="ab-fingerprint", master="local[32]", shuffle_partitions=64)
-    base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    base = spark.read.parquet(args.docs)
     # scale by replication with distinct ids (measurement input only)
     big = (
         base.crossJoin(spark.range(mult).select(F.col("id").alias("_rep")))
         .select((F.col("doc_id") + F.col("_rep") * 1_000_000).alias("doc_id"), "text")
     )
-    big.write.mode("overwrite").parquet("/tmp/ab-fp-docs")
-    docs = spark.read.parquet("/tmp/ab-fp-docs")
+    big.write.mode("overwrite").parquet(args.scratch)
+    docs = spark.read.parquet(args.scratch)
     n = docs.count()
     print(f"docs: {n}")
 
-    # correctness first: identical rows on the real sf0.1 table
+    # correctness first: identical rows on the real input table
     a = fingerprint(base, w=5).orderBy("id").collect()
     b = fingerprint_nowin(base, w=5).orderBy("id").collect()
     assert a == b, "variant results differ!"
-    print("parity: identical on sf0.1 (5000 docs)")
+    print(f"parity: identical on the input ({base.count()} docs)")
 
     ts = {"old": [], "new": []}
     for r in range(reps):
